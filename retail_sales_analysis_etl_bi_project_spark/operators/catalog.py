@@ -9,6 +9,10 @@ without string-splitting DDL files.
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 
 # Gold DDL (sql/ddl_oracle.sql:26-85) with Spark types; DECIMAL at the
@@ -173,6 +177,63 @@ def jdbc_sink(
     writer.mode(mode).save()
 
 
+def _touched_since(path: str, cutoff: float) -> bool:
+    """True if anything under ``path`` has an mtime >= cutoff. The
+    top-level dir's mtime alone is NOT enough: during a long Spark
+    parquet write the task activity happens inside ``_temporary``
+    subtrees, so the tmp dir itself can look minutes old while a write
+    is very much alive. Walk with early exit — for a genuinely dead
+    dir the walk is the price of one directory scan; for a live one it
+    exits at the first fresh entry."""
+    walk_errors: list[OSError] = []
+    try:
+        if os.path.getmtime(path) >= cutoff:
+            return True
+        for root, dirs, files in os.walk(path, onerror=walk_errors.append):
+            for name in dirs + files:
+                try:
+                    if os.path.getmtime(os.path.join(root, name)) >= cutoff:
+                        return True
+                except OSError:
+                    # an entry that vanished mid-walk IS activity (a
+                    # writer renaming task files); treat as live
+                    return True
+    except OSError:
+        return True  # unreadable: assume live, never reap blind
+    if walk_errors:
+        # os.walk swallows unreadable SUBDIRS by default (onerror
+        # hook) — fresh activity could hide inside one, so an
+        # untraversable tree is never declared dead
+        return True
+    return False
+
+
+def reap_stale_tmp_dirs(
+    target: str, ttl_sec: int = 600, marker: str = "_tmp_"
+) -> None:
+    """Remove aged ``<target><marker>*`` siblings (never the committed
+    copy); errors never propagate into the batch they ride on. The age
+    gate is what makes this safe under CONCURRENT writers: a sibling
+    with NO filesystem activity anywhere in its tree for ``ttl_sec``
+    (see _touched_since — in-flight Spark writes keep their
+    ``_temporary`` subtree hot, so a live write of any duration stays
+    fresh) is a crash leftover; anything fresher may be another
+    invocation's in-flight copy and deleting it would fail that writer
+    mid-swap."""
+    parent, base = os.path.dirname(target) or ".", os.path.basename(target)
+    try:
+        entries = os.listdir(parent)
+    except OSError:
+        return
+    cutoff = time.time() - ttl_sec
+    for d in entries:
+        if not d.startswith(f"{base}{marker}"):
+            continue
+        path = os.path.join(parent, d)
+        if not _touched_since(path, cutoff):
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -183,9 +244,8 @@ def compact_parquet(
     >=1 file per partition; a month of 1-minute batches is ~40k tiny
     files whose open/footer costs dominate scans long before data
     volume does). Rewrites the directory to ceil(bytes / target_mb)
-    files and atomically swaps it in (write to sibling tmp + two
-    os.rename, the upsert_stream_to_parquet protocol — readers never
-    observe a half-compacted table).
+    files and swaps it in (write to sibling tmp + two renames — readers
+    never observe a half-compacted table).
 
     Sizing note: the file count comes from the CURRENT on-disk bytes
     (post-encoding), not row counts, so compression ratio changes are
@@ -197,8 +257,9 @@ def compact_parquet(
     subdirectories is refused rather than silently flattened into one
     file that destroys the partition layout (r6 review finding).
 
-    Swap protocol (the upsert_stream_to_parquet discipline, with the
-    same FIXED `_prev` name): materialize to a uuid tmp dir, move the
+    Swap protocol (in place, because other readers open ``path``
+    directly, so the streaming stores' versioned layout does not fit;
+    FIXED `_prev` name): materialize to a uuid tmp dir, move the
     live dir to `<path>_prev`, move tmp in, remove `_prev`. A crash
     between the two moves leaves the committed data at `_prev`; the
     NEXT invocation restores it before compacting, so no state is ever
@@ -210,8 +271,6 @@ def compact_parquet(
     Returns {files_before, files_after, bytes} for the maintenance log.
     """
     import math
-    import os
-    import shutil
     import uuid
 
     prev = f"{path.rstrip('/')}_prev"
@@ -223,10 +282,7 @@ def compact_parquet(
     # BEFORE the swap strands `<path>_compact_<hex>` forever (a full
     # copy of the table per crash). Stale tmp siblings are never the
     # committed copy — but a FRESH one may be a concurrent compaction's
-    # in-flight write, so the reap is age-gated (streaming/swap.py's
-    # shared reaper), not unconditional.
-    from ..streaming.swap import reap_stale_tmp_dirs
-
+    # in-flight write, so the reap is age-gated, not unconditional.
     reap_stale_tmp_dirs(path.rstrip("/"), marker="_compact_")
     entries = os.listdir(path)
     subdirs = [e for e in entries if os.path.isdir(os.path.join(path, e))]

@@ -503,21 +503,6 @@ def _bucket_pairs(
     return out.select(*cols)
 
 
-def band_hash_expr(sig_col: Column | str, band_idx: int, rows_per_band: int) -> Column:
-    """Band bucket key: Horner-31 fold of the band's signature values,
-    masked to 40 bits each step. Exact same integer sequence in Spark and
-    DuckDB (plain * + & on longs) — unlike xxhash64, which DuckDB cannot
-    reproduce. Occasional fold collisions only add false candidates,
-    which verification removes (and both engines collide identically)."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    acc = F.element_at(sig, band_idx * rows_per_band + 1)
-    for j in range(1, rows_per_band):
-        acc = (acc * 31 + F.element_at(sig, band_idx * rows_per_band + j + 1)).bitwiseAND(
-            F.lit(BAND_MASK)
-        )
-    return acc
-
-
 def _banded_rows(with_sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """Signature relation -> (doc_id_, band_idx, band_hash) band rows.
     Band rows carry only those 3 fixed-size values — never the 64-long
@@ -585,19 +570,6 @@ def _verify_pairs(
         .filter(F.col("jaccard") >= threshold)
     )
     return out.orderBy("doc_a", "doc_b") if sort else out
-
-
-def _verify_candidates(
-    cand: DataFrame,
-    docs: DataFrame,
-    threshold: float,
-    n: int,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    return _verify_pairs(
-        cand, shingle_relation(docs, n, text_col, id_col), threshold
-    )
 
 
 def minhash_candidate_pairs(
@@ -873,38 +845,6 @@ def signature_store_relations(
     return b, shingle_relation(docs, n, text_col, id_col)
 
 
-def incremental_pairs_vs_store(
-    new_docs: DataFrame,
-    old_bands: DataFrame | None,
-    old_shingles: DataFrame | None,
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """The STORE-BACKED form of incremental_minhash_dedup_pairs: the
-    old side arrives as its persisted relations — band rows
-    (doc_id_, band_idx, band_hash) and shingles (did, sh) written at
-    original ingest — so a batch costs its own signature computation
-    plus joins against the store; the old corpus is never re-hashed.
-    Pass None for both on the very first batch (empty store).
-
-    Returns (doc_a, doc_b, jaccard) pairs involving at least one new
-    document. Streaming wrapper: streaming/dedup.py (which computes the
-    new side's relations ONCE via signature_store_relations, persists
-    them, and calls pairs_from_relations on the read-back — this
-    convenience form recomputes them from ``new_docs``)."""
-    nb, ns = signature_store_relations(
-        new_docs, num_hashes, bands, n, text_col, id_col
-    )
-    return pairs_from_relations(
-        nb, ns, old_bands, old_shingles, threshold, max_bucket
-    )
-
-
 def pairs_from_relations(
     new_bands: DataFrame,
     new_shingles: DataFrame,
@@ -1060,31 +1000,6 @@ def winnow_fingerprints(
 
 
 # --------------------------------------------------------------- simhash
-
-def simhash_expr(text: Column | str, bits: int = 60) -> Column:
-    """SimHash: per bit position, sum +1/-1 over token hashes; bit is 1
-    when the sum is positive. Returns a bigint bit pattern. Tokens
-    hashed with hash60 (md5-derived — DuckDB-reproducible, hence the
-    60-bit default: one md5 supplies exactly 60 verifiable bits)."""
-    assert bits <= 60
-    toks = tokens_expr(text)
-    hashes = F.transform(toks, hash60_expr)
-
-    def voter(b: int):
-        # factory, not default-arg capture — see minhash_signature_expr
-        return lambda s, h: s + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    acc = F.lit(0).cast("bigint")
-    for b in range(bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("bigint"), voter(b))
-        # shiftleft, not lit(2**b): 2**63 overflows a signed long
-        acc = acc + F.when(
-            vote > 0, F.shiftleft(F.lit(1).cast("bigint"), b)
-        ).otherwise(0)
-    return acc
-
 
 def hamming_expr(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))

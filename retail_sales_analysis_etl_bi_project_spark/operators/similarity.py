@@ -22,6 +22,7 @@ it parallelizes trivially on a cluster.
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import Column, DataFrame
@@ -40,8 +41,19 @@ def _vec_lit_sql(row: list[float]) -> str:
     rounded, so the parsed value is BIT-IDENTICAL to F.lit of the same
     float (verified incl. -0.0 / 1e-300 / double-max); the D suffix
     pins the literal to DOUBLE (a bare decimal literal parses as
-    DECIMAL)."""
-    return "array(" + ",".join(repr(float(x)) + "D" for x in row) + ")"
+    DECIMAL). Non-finite entries have no numeric literal form (repr
+    gives ``nanD``/``infD``, which parse as column names), so they are
+    emitted as string casts, which Spark parses to the same IEEE
+    values."""
+    return "array(" + ",".join(_dbl_lit_sql(float(x)) for x in row) + ")"
+
+
+def _dbl_lit_sql(x: float) -> str:
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
 
 def _nested_lit(values: list[list[float]]) -> Column:

@@ -315,16 +315,19 @@ if HAS_PYDS:
 
         def commit(self, messages):
             """Driver-side: publish the manifest atomically (tmp +
-            rename). Overwrite mode lists exactly THIS job's files;
-            append mode merges them into the existing manifest (files
-            union, row counts summed) so previously committed data
-            survives — mode('append') used to silently behave as
-            overwrite. In both modes, .jsonl files absent from the
-            published manifest (earlier jobs in overwrite mode, lost
-            task attempts in either) are reaped so the directory
-            converges to the manifest."""
+            os.replace, the streaming stores' publish). Overwrite mode
+            lists exactly THIS job's files; append mode merges them
+            into the existing manifest (files union, row counts
+            summed) so previously committed data survives —
+            mode('append') used to silently behave as overwrite. In
+            both modes, .jsonl files absent from the published
+            manifest (earlier jobs in overwrite mode, lost task
+            attempts in either) are reaped so the directory converges
+            to the manifest."""
             import json as _json
             import os as _os
+
+            from ..streaming.store import publish
 
             # manifest carries per-file row counts so an append merge
             # is a plain dict-union — idempotent under driver-side
@@ -353,7 +356,6 @@ if HAS_PYDS:
                     legacy_rows += int(prev.get("n_rows", 0))
                 file_rows = prev_rows | file_rows
             files = sorted(file_rows)
-            tmp = manifest + ".tmp"
             doc = {
                 "files": files,
                 "n_rows": legacy_rows + sum(file_rows.values()),
@@ -361,9 +363,7 @@ if HAS_PYDS:
             }
             if legacy_rows:
                 doc["legacy_rows"] = legacy_rows
-            with open(tmp, "w") as fh:
-                _json.dump(doc, fh)
-            _os.replace(tmp, manifest)
+            publish(manifest, doc)
             keep = set(files) | {"_manifest.json"}
             for f in _os.listdir(self.path):
                 if f.endswith(".jsonl") and f not in keep:

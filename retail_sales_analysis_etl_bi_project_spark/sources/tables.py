@@ -85,21 +85,24 @@ _SCHEMA_CACHE: dict[tuple, object] = {}
 def _path_sig(path: str) -> tuple:
     """Content signature for the memo key. For a plain file:
     (mtime_ns, size). For a DIRECTORY (standard Spark multi-part
-    layout): the sorted (name, mtime_ns, size) of every entry inside —
-    rewriting a part file in place changes neither the directory's
-    mtime nor its size, so stat() of the top-level path alone could
-    serve a stale schema (r15 ADVICE item 1)."""
+    layout): the sorted (relative path, mtime_ns, size) of every entry
+    in the whole tree — rewriting a part file in place changes neither
+    the directory's mtime nor its size, and in a partitioned layout
+    (gold ``fact_sales``' ``month_key=`` dirs) the part files sit one
+    level down, so only a recursive walk sees every rewrite."""
     st = os.stat(path)
     if not os.path.isdir(path):
         return (st.st_mtime_ns, st.st_size)
     entries = []
-    for name in sorted(os.listdir(path)):
-        try:
-            est = os.stat(os.path.join(path, name))
-        except OSError:
-            continue
-        entries.append((name, est.st_mtime_ns, est.st_size))
-    return tuple(entries)
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            full = os.path.join(root, name)
+            try:
+                est = os.stat(full)
+            except OSError:
+                continue
+            entries.append((os.path.relpath(full, path), est.st_mtime_ns, est.st_size))
+    return tuple(sorted(entries))
 
 
 def _scan(spark: SparkSession, path: str) -> DataFrame:

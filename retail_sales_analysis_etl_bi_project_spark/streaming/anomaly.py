@@ -8,10 +8,10 @@ streaming monitor's flags equal the one-shot batch query bit-for-bit
 micro-batch).
 
 Same exactly-once recipe as streaming/kpi.py: foreachBatch is
-at-least-once per strictly-increasing batch_id, so the last applied
-batch_id commits ATOMICALLY with the data (underscore sidecar written
-into the tmp dir before the swap) and a replayed id is a no-op. One
-target dir is bound to one checkpoint lineage.
+at-least-once per strictly-increasing batch_id, so every commit is a
+new store version published by one atomic pointer that records the
+batch_id (streaming/store.py), and a replayed id is a no-op. One target
+dir is bound to one checkpoint lineage.
 
 State story at 100 TB: the engine holds no state — the store is
 |event_type x day| rows (tiny at any scale), each micro-batch costs a
@@ -22,51 +22,31 @@ never the raw stream.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.stat_queries import anomaly_flags, cusum_flags, daily_counts
+from . import store
 from .events import _await_or_raise
-from .swap import atomic_swap_write, reap_stale_tmp_dirs, restore_prev
-
-_SIDECAR = "_last_batch.json"
-
-
-def _last_applied(target: str) -> int:
-    try:
-        with open(os.path.join(target, _SIDECAR)) as f:
-            return int(json.load(f)["batch_id"])
-    except (OSError, ValueError, KeyError):
-        return -1
 
 
 def apply_counts_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one micro-batch's counts into the store. Replay-safe: a
-    batch_id at or below the committed sidecar id is skipped."""
-    spark = batch_df.sparkSession
-    reap_stale_tmp_dirs(target)
-    restore_prev(target)
-    if os.path.exists(target) and batch_id <= _last_applied(target):
+    batch_id at or below the published one is skipped."""
+    ptr = store.current(target)
+    if ptr is not None and batch_id <= ptr["batch_id"]:
         return  # crash-replayed batch: already folded in
     new = daily_counts(batch_df)
-    if os.path.exists(target):
+    if ptr is not None:
         merged = (
-            spark.read.parquet(target)
+            store.read(batch_df.sparkSession, target)
             .unionByName(new)
             .groupBy("event_type", "day")
             .agg(F.sum("n_events").alias("n_events"))
         )
     else:
         merged = new
-
-    def write_sidecar(tmp: str) -> None:
-        with open(os.path.join(tmp, _SIDECAR), "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-
-    atomic_swap_write(merged, target, finish_tmp=write_sidecar)
+    store.commit(merged, target, batch_id)
 
 
 def maintain_volume_stream(
@@ -92,7 +72,7 @@ def anomaly_readout(spark: SparkSession, target: str) -> DataFrame:
     maintained flags can never drift from the one-shot form. The
     per-batch partials likewise reuse plans/stat_queries.daily_counts:
     both halves of the streamed==batch guarantee live in ONE place."""
-    return anomaly_flags(spark.read.parquet(target))
+    return anomaly_flags(store.read(spark, target))
 
 
 def cusum_readout(spark: SparkSession, target: str) -> DataFrame:
@@ -101,4 +81,4 @@ def cusum_readout(spark: SparkSession, target: str) -> DataFrame:
     the batch query's expressions (plans/stat_queries.cusum_flags), so
     one maintained day-grain table serves both monitors and neither
     can drift from its one-shot form."""
-    return cusum_flags(spark.read.parquet(target))
+    return cusum_flags(store.read(spark, target))

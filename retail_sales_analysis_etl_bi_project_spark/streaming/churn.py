@@ -9,10 +9,10 @@ This completes the incremental family with its SET-VALUED member:
 KPI merge folds additive partials, the dedup/novelty stores fold
 append-only keyed relations, and this folds a DISTINCT-set union —
 which is naturally IDEMPOTENT (re-unioning a replayed batch cannot
-change a set), so exactly-once needs no arithmetic guard; the batch_id
-sidecar protocol is still applied so a replay is a cheap no-op rather
-than a full rewrite, and so every store in the repo honors one
-uniform contract (streaming/swap.py).
+change a set), so exactly-once needs no arithmetic guard; the
+published batch_id guard (streaming/store.py) still applies, so a
+replay is a cheap no-op rather than a full rewrite, and every additive
+store honors one uniform contract.
 
 The readout side calls the SAME churn_jaccard_readout the batch query
 uses — one definition of the statistic, so streamed == batch is an
@@ -28,39 +28,30 @@ the pair key). The readout is month-grain.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.assoc_queries import active_month_pairs, churn_jaccard_readout
+from . import store
 from .events import _await_or_raise
-from .swap import (
-    already_applied,
-    atomic_swap_write,
-    batch_sidecar_writer,
-    reap_stale_tmp_dirs,
-    restore_prev,
-)
 
 
 def apply_churn_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one micro-batch's active pairs into the stored set.
     Replay-safe twice over: set union is idempotent AND a batch_id at
-    or below the committed sidecar id is skipped outright."""
-    spark = batch_df.sparkSession
-    reap_stale_tmp_dirs(target)
-    restore_prev(target)
-    if already_applied(target, batch_id):
+    or below the published one is skipped outright."""
+    ptr = store.current(target)
+    if ptr is not None and batch_id <= ptr["batch_id"]:
         return
     new = active_month_pairs(batch_df)
-    if os.path.exists(target):
-        existing = spark.read.parquet(target)
-        merged = existing.unionByName(new).dropDuplicates(
-            ["mnum", "o_custkey"]
+    if ptr is not None:
+        merged = (
+            store.read(batch_df.sparkSession, target)
+            .unionByName(new)
+            .dropDuplicates(["mnum", "o_custkey"])
         )
     else:
         merged = new
-    atomic_swap_write(merged, target, finish_tmp=batch_sidecar_writer(batch_id))
+    store.commit(merged, target, batch_id)
 
 
 def maintain_churn_stream(
@@ -87,4 +78,4 @@ def read_churn(spark: SparkSession, target: str) -> DataFrame:
     """Month-over-month Jaccard/retention readout of the maintained
     set — the IDENTICAL readout the batch query applies to its own
     active-pairs relation."""
-    return churn_jaccard_readout(spark.read.parquet(target))
+    return churn_jaccard_readout(store.read(spark, target))

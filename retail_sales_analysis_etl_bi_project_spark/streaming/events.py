@@ -23,10 +23,11 @@ plans below are source-agnostic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.events_queries import SESSION_GAP_SEC
+from . import store
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -287,6 +288,40 @@ def _await_or_raise(q, timeout_sec: int) -> None:
         )
 
 
+def apply_upsert_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    target: str,
+    key_cols: tuple[str, ...] = ("user_id",),
+    order_col: str = "ts",
+) -> None:
+    """Merge one micro-batch into the latest-per-key store at
+    ``target`` (the foreachBatch body of upsert_stream_to_parquet).
+    The merge is idempotent, so it needs no batch guard: a replayed or
+    stale batch can never regress a key, and one target may be fed by
+    several checkpoint lineages."""
+    keys = list(key_cols)
+
+    def latest_per_key(df: DataFrame) -> DataFrame:
+        order = [F.col(order_col).desc()] + [
+            F.col(c).desc() for c in df.columns if c not in (*keys, order_col)
+        ]
+        w = Window.partitionBy(*keys).orderBy(*order)
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    latest = latest_per_key(batch_df)
+    if store.current(target) is not None:
+        existing = store.read(batch_df.sparkSession, target)
+        merged = latest_per_key(existing.unionByName(latest))
+    else:
+        merged = latest
+    store.commit(merged, target, batch_id)
+
+
 def upsert_stream_to_parquet(
     stream_df: DataFrame,
     target: str,
@@ -309,53 +344,24 @@ def upsert_stream_to_parquet(
     (out-of-order files, replays) can never regress the dimension: the
     target converges to latest-per-key regardless of batch order, which
     also makes a checkpoint-replayed batch an exact no-op (idempotent
-    recovery). The rewrite lands in a tmp dir, the old target is moved
-    aside to ``<target>_prev``, the tmp is moved in, then ``_prev`` is
-    dropped; a crash between the two moves leaves ``_prev`` on disk and
-    the next invocation RESTORES it before merging, so no committed
-    batch is ever lost. That full rewrite + two-rename protocol is the
-    honest non-ACID floor; on a table format with transactions the SAME
-    foreachBatch body becomes ``MERGE WHEN MATCHED [AND newer] UPDATE
-    WHEN NOT MATCHED INSERT`` touching only matched files (the Delta
-    arm of upsert_dim shows the exact statement).
+    recovery). Each merge is written as a new version of the store and
+    published by an atomic pointer (streaming/store.py); a crash before
+    the publish leaves the previous version current, and readers
+    (``store.read``) only ever see a whole committed version. That full
+    rewrite per batch is the honest non-ACID floor; on a table format
+    with transactions the SAME foreachBatch body becomes ``MERGE WHEN
+    MATCHED [AND newer] UPDATE WHEN NOT MATCHED INSERT`` touching only
+    matched files (the Delta arm of upsert_dim shows the exact
+    statement).
 
     State story at 100 TB: foreachBatch holds NO streaming state — the
     dedup-within-batch is a bounded per-batch window, and cross-batch
     reconciliation lives in the target table, so nothing accumulates in
     the streaming engine regardless of stream length."""
-    import os
-
-    from pyspark.sql import Window
-
-    from .swap import atomic_swap_write, reap_stale_tmp_dirs, restore_prev
-
-    keys = list(key_cols)
-
-    def latest_per_key(df: DataFrame) -> DataFrame:
-        order = [F.col(order_col).desc()] + [
-            F.col(c).desc() for c in df.columns if c not in (*keys, order_col)
-        ]
-        w = Window.partitionBy(*keys).orderBy(*order)
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        reap_stale_tmp_dirs(target)
-        restore_prev(target)
-        latest = latest_per_key(batch_df)
-        if os.path.exists(target):
-            existing = spark.read.parquet(target)
-            merged = latest_per_key(existing.unionByName(latest))
-        else:
-            merged = latest
-        atomic_swap_write(merged, target)
-
     q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
+        stream_df.writeStream.foreachBatch(
+            lambda df, bid: apply_upsert_batch(df, bid, target, key_cols, order_col)
+        )
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
         .trigger(availableNow=True)

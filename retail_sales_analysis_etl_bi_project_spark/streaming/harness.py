@@ -1,9 +1,8 @@
 """File-source micro-batch harness: split a DataFrame into N
 single-file parquet chunks under a source directory, so a
 ``readStream.option("maxFilesPerTrigger", 1)`` over the directory
-replays the data as N micro-batches. Used by the streaming tests and
-tools/bench_streaming.py — one home so a harness fix applies once
-(review finding, r9: this was copy-pasted four times)."""
+replays the data as N micro-batches. Used by the streaming tests — one
+home so a harness fix applies once (this was copy-pasted four times)."""
 
 from __future__ import annotations
 

@@ -9,10 +9,9 @@ Unlike the latest-per-key upsert (streaming/events.py), an additive
 merge is NOT naturally idempotent: a crash-replayed micro-batch would
 double-count. foreachBatch's contract is at-least-once per batch_id
 with batch_ids strictly increasing, so exactly-once is recovered the
-standard way — the last applied batch_id is committed ATOMICALLY with
-the data (an underscore-prefixed sidecar inside the table dir, written
-to the tmp copy before the swap; parquet readers ignore ``_``-files)
-and a batch whose id is <= the stored id is a no-op. One target is
+standard way: each commit is a new version of the store published by
+one atomic pointer that also records the batch_id (streaming/store.py),
+and a batch whose id is <= the published id is a no-op. One target is
 therefore bound to one checkpoint lineage: a fresh checkpoint restarts
 batch ids at 0 and must come with a fresh target.
 
@@ -26,20 +25,12 @@ algebra: the maintained table equals the full recompute bit-for-bit
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import fixed_point_partial
+from . import store
 from .events import _await_or_raise
-from .swap import (
-    already_applied,
-    atomic_swap_write,
-    batch_sidecar_writer,
-    reap_stale_tmp_dirs,
-    restore_prev,
-)
 
 
 def kpi_partials(
@@ -64,17 +55,15 @@ def apply_kpi_batch(
     amount_col: str = "o_totalprice",
 ) -> None:
     """Fold one micro-batch into the partials table. Replay-safe: a
-    batch_id at or below the committed sidecar id is skipped."""
-    spark = batch_df.sparkSession
-    reap_stale_tmp_dirs(target)
-    restore_prev(target)
-    if already_applied(target, batch_id):
+    batch_id at or below the published one is skipped."""
+    ptr = store.current(target)
+    if ptr is not None and batch_id <= ptr["batch_id"]:
         return  # crash-replayed batch: already folded in
     new = kpi_partials(batch_df, ts_col, amount_col)
-    if os.path.exists(target):
-        existing = spark.read.parquet(target)
+    if ptr is not None:
         merged = (
-            existing.unionByName(new)
+            store.read(batch_df.sparkSession, target)
+            .unionByName(new)
             .groupBy("year", "month")
             .agg(
                 F.sum("_n").alias("_n"),
@@ -83,7 +72,7 @@ def apply_kpi_batch(
         )
     else:
         merged = new
-    atomic_swap_write(merged, target, finish_tmp=batch_sidecar_writer(batch_id))
+    store.commit(merged, target, batch_id)
 
 
 def maintain_kpi_stream(
@@ -111,8 +100,7 @@ def maintain_kpi_stream(
 def read_kpi(spark: SparkSession, target: str) -> DataFrame:
     """Finalize the stored partials: one division per group, exactly as
     fixed_point_final (the partials are already collapsed per key)."""
-    t = spark.read.parquet(target)
-    return t.select(
+    return store.read(spark, target).select(
         "year",
         "month",
         F.col("_n").alias("n_orders"),

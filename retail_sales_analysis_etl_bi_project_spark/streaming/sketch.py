@@ -13,10 +13,10 @@ tests/test_streaming_sketch.py — no tolerance, the deterministic-hash
 property of the batch query carried into streaming).
 
 Exactly-once discipline: identical to streaming/kpi.py — an additive
-merge is not idempotent, so the last applied batch_id commits
-ATOMICALLY with the cells (sidecar written into the tmp dir before the
-swap) and a replayed batch id is a no-op. One target binds to one
-checkpoint lineage.
+merge is not idempotent, so every commit is a new store version
+published by one atomic pointer that records the batch_id
+(streaming/store.py), and a replayed batch id is a no-op. One target
+binds to one checkpoint lineage.
 
 State story at 100 TB: the stored table is ≤ CMS_D × CMS_W rows (4096)
 FOREVER — the whole point of sketch maintenance; each micro-batch costs
@@ -26,42 +26,31 @@ one tokenize + term-grain combine of the DELTA plus a merge over the
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import countmin_cells, countmin_entries, term_counts
+from . import store
 from .events import _await_or_raise
-from .swap import (
-    already_applied,
-    atomic_swap_write,
-    batch_sidecar_writer,
-    reap_stale_tmp_dirs,
-    restore_prev,
-)
 
 
 def apply_sketch_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one document micro-batch's CMS cells into the stored grid.
-    Replay-safe: a batch_id at or below the committed sidecar id is
-    skipped (swap.already_applied — the shared additive-sink protocol)."""
-    spark = batch_df.sparkSession
-    reap_stale_tmp_dirs(target)
-    restore_prev(target)
-    if already_applied(target, batch_id):
+    Replay-safe: a batch_id at or below the published one is skipped."""
+    ptr = store.current(target)
+    if ptr is not None and batch_id <= ptr["batch_id"]:
         return  # crash-replayed batch: already folded in
     new = countmin_cells(term_counts(batch_df))
-    if os.path.exists(target):
-        existing = spark.read.parquet(target)
+    if ptr is not None:
         merged = (
-            existing.unionByName(new)
+            store.read(batch_df.sparkSession, target)
+            .unionByName(new)
             .groupBy("r", "c")
             .agg(F.sum("n").cast("bigint").alias("n"))
         )
     else:
         merged = new
-    atomic_swap_write(merged, target, finish_tmp=batch_sidecar_writer(batch_id))
+    store.commit(merged, target, batch_id)
 
 
 def maintain_sketch_stream(
@@ -86,7 +75,7 @@ def maintain_sketch_stream(
 
 def read_sketch_cells(spark: SparkSession, target: str) -> DataFrame:
     """The maintained (r, c, n) grid."""
-    return spark.read.parquet(target)
+    return store.read(spark, target)
 
 
 def cms_estimate(spark: SparkSession, target: str, terms: DataFrame) -> DataFrame:

@@ -25,6 +25,31 @@ def test_cosine_known_values(spark):
     assert abs(vals[2] - 1 / math.sqrt(2)) < 1e-12
 
 
+def test_vec_lit_sql_non_finite_matches_f_lit_bitwise(spark):
+    """A plane or codebook row holding NaN / +-inf must still parse, to
+    the same IEEE bits as F.lit; finite entries keep their exact text."""
+    import struct
+
+    from retail_sales_analysis_etl_bi_project_spark.operators.similarity import (
+        _nested_lit,
+        _vec_lit_sql,
+    )
+
+    row = [float("nan"), float("inf"), float("-inf"), 0.1, -0.0, 1e-300]
+    assert _vec_lit_sql([0.1, -0.0]) == "array(0.1D,-0.0D)"
+    got = spark.range(1).select(
+        F.expr(_vec_lit_sql(row)).alias("parsed"),
+        F.lit(row).alias("lit"),
+        _nested_lit([row, row]).alias("nested"),
+    ).first()
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
+
+    assert bits(got.parsed) == bits(got.lit)
+    assert [bits(r) for r in got.nested] == [bits(row), bits(row)]
+
+
 def test_brute_force_topk_orders_and_excludes_self(spark):
     emb = spark.createDataFrame(
         [

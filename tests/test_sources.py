@@ -150,3 +150,25 @@ def test_load_fact_wide_repartitions_narrow_layouts_only(spark, sf_dir, tmp_path
     a = sorted(r.o_orderkey for r in narrow.select("o_orderkey").collect())
     b = sorted(r.o_orderkey for r in wide.select("o_orderkey").collect())
     assert a == b
+
+
+def test_path_sig_sees_rewrites_in_partition_subdirs(spark, tmp_path):
+    """A part file rewritten in place under a ``key=value`` subdir (the
+    month-partitioned gold fact layout) must change the schema memo key,
+    or the memo would keep serving the schema of the old file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from retail_sales_analysis_etl_bi_project_spark.sources.tables import _path_sig
+
+    path = tmp_path / "fact_sales"
+    spark.range(4).withColumn("month_key", F.col("id") % 2).write.partitionBy(
+        "month_key"
+    ).parquet(str(path))
+    before = _path_sig(str(path))
+    part = next((path / "month_key=0").glob("part-*.parquet"))
+    pq.write_table(pa.table({"id": [0, 2], "extra": ["a", "b"]}), str(part))
+    os.utime(part, ns=(1, 1))  # a distinct mtime even on coarse clocks
+    assert _path_sig(str(path)) != before

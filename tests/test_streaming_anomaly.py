@@ -7,6 +7,7 @@ from retail_sales_analysis_etl_bi_project_spark.plans.stat_queries import (
     events_anomaly_daily,
 )
 from retail_sales_analysis_etl_bi_project_spark.sources.tables import load_table
+from retail_sales_analysis_etl_bi_project_spark.streaming import store
 from retail_sales_analysis_etl_bi_project_spark.streaming.harness import (
     chunked_file_source,
 )
@@ -48,14 +49,14 @@ def test_replayed_batch_is_not_double_counted(spark, tmp_path):
     target = str(tmp_path / "volume")
     apply_counts_batch(events, 0, target)
     once = sorted(
-        map(tuple, spark.read.parquet(target).collect())
+        map(tuple, store.read(spark, target).collect())
     )
     apply_counts_batch(events, 0, target)  # crash-replay: no-op
-    assert sorted(map(tuple, spark.read.parquet(target).collect())) == once
+    assert sorted(map(tuple, store.read(spark, target).collect())) == once
     apply_counts_batch(events, 1, target)  # new id folds in
     doubled = {
         (r.event_type, r.day): r.n_events
-        for r in spark.read.parquet(target).collect()
+        for r in store.read(spark, target).collect()
     }
     base = {(r[0], r[1]): r[2] for r in once}
     assert doubled == {k: 2 * v for k, v in base.items()}

@@ -62,7 +62,7 @@ def main() -> None:
     prior_timings: dict[str, float] = {}
     prior_errors: dict[str, str] = {}
     # foreign top-level sections other tools merge into the artifact
-    # (e.g. bench_streaming.py's "streaming") must survive a rewrite —
+    # (e.g. an older artifact's "streaming" section) must survive a rewrite —
     # preserved even WITHOUT --resume (review finding, r9: a full
     # re-bench silently dropped the streaming throughput numbers)
     _OWN_KEYS = {
