@@ -496,113 +496,6 @@ def bpe_train_merges(
     ).orderBy("merge_rank")
 
 
-def bpe_train_merges_batched(
-    docs,
-    rounds: int = 4,
-    batch: int = 4,
-    text_col: str = "text",
-    candidate_factor: int = 8,
-) -> "DataFrame":
-    """BATCHED BPE merge training — the 30k-merge scale path of
-    bpe_train_merges (r11 VERDICT item 4): instead of one driver
-    argmax round-trip PER merge rule, each round counts pairs once,
-    collects the top ``batch * candidate_factor`` candidate rows
-    (KB-scale), greedily selects up to ``batch`` SYMBOL-DISJOINT rules
-    on the driver, and applies them all in ONE chained fold pass —
-    cutting driver round-trips and cluster count-jobs from ``rounds``
-    to ~``rounds / batch``. Output schema and rank semantics match the
-    sequential trainer.
-
-    Exactness: merging (pa, pb) only perturbs counts of pairs that
-    TOUCH pa or pb, so rules whose symbol sets are pairwise disjoint —
-    including each rule's MERGED string, which an unapplied rule could
-    otherwise match as a side (e.g. selecting both ("a","b") and
-    ("ab","c") from one snapshot) — see the same counts the sequential
-    trainer would, and the chained fold applies them in the same rank
-    order. On such corpora batched == sequential EXACTLY (pinned in
-    tests/test_text.py). In general a merge can create NEW pairs
-    (x, merged) that outrank a later selected rule; batched training
-    is then the standard industrial approximation (one count snapshot
-    per batch), and the knob is ``batch`` — batch=1 degrades to the
-    exact sequential trainer. Candidates that conflict within the
-    snapshot are simply left for the next round, never applied out of
-    order; a round always selects at least the argmax, so progress
-    and termination match the sequential loop.
-
-    Scale shape: identical per-round dataflow to the sequential
-    trainer (vocabulary-grain heavy-hitter shuffle, generation
-    persists with the same successor-materialized unpersist
-    discipline); the only new driver traffic is ``batch *
-    candidate_factor`` rows per round instead of 1."""
-    from pyspark.sql import functions as F
-
-    spark = docs.sparkSession
-    words = (
-        lower_terms(docs)
-        .groupBy(F.col("term").alias("word"))
-        .agg(F.count(F.lit(1)).alias("word_freq"))
-    )
-    cur = words.select("word_freq", char_syms_expr("word").alias("syms"))
-    merges: list[tuple] = []
-    live_persist = None
-    prev_persist = None
-    while len(merges) < rounds:
-        want = rounds - len(merges)
-        k = min(batch, want)
-        pair_structs = F.when(
-            F.size("syms") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("syms") - 1),
-                lambda i: F.struct(
-                    F.element_at("syms", i).alias("pa"),
-                    F.element_at("syms", i + 1).alias("pb"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<pa:string,pb:string>>"))
-        top = (
-            cur.select("word_freq", F.explode(pair_structs).alias("p"))
-            .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-            .agg(F.sum("word_freq").cast("bigint").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("pa"), F.asc("pb"))
-            .limit(max(k * candidate_factor, 1))
-            .collect()
-        )
-        if prev_persist is not None:
-            prev_persist.unpersist(blocking=False)
-            prev_persist = None
-        if not top:
-            break
-        chosen = []
-        used: set[str] = set()
-        for row in top:
-            if len(chosen) == k:
-                break
-            if row.pa in used or row.pb in used or (row.pa + row.pb) in used:
-                continue
-            chosen.append(row)
-            used.update((row.pa, row.pb, row.pa + row.pb))
-        # the snapshot argmax is always symbol-free at selection time,
-        # so chosen is never empty here (first candidate always taken)
-        for row in chosen:
-            merges.append(
-                (len(merges) + 1, row.pa, row.pb, row.pa + row.pb, row.cnt)
-            )
-        if len(merges) < rounds:
-            syms = F.col("syms")
-            for row in chosen:
-                syms = merge_fold_expr(syms, row.pa, row.pb)
-            cur = cur.select("word_freq", syms.alias("syms")).persist()
-            prev_persist, live_persist = live_persist, cur
-    for h in (live_persist, prev_persist):
-        if h is not None:
-            h.unpersist(blocking=False)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, left_sym string, right_sym string, "
-        "merged string, pair_count bigint",
-    ).orderBy("merge_rank")
-
-
 # ---------------------------------------------------------------- r12f
 # Count-Min sketch primitives, shared between the batch audit query
 # (plans/eval_queries.text_countmin_heavyhitters) and the streaming

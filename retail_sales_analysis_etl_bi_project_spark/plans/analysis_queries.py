@@ -29,10 +29,6 @@ table — plans/shared_cache.py) and sim_ann_recall_tuning (the IVF
 recall-knob ladder: probe count x refinement x training fraction,
 hash-pinned with deltas).
 
-Window note: as of round 7 every query in this module is INSIDE the
-driver's first-50 correctness window (the r6f four rotated in per the
-plan). See __spark_entry__._PAST_WINDOW and COVERAGE.md.
-
 Numeric discipline (see REQUIREMENTS.md): scores use only +,*,/ over
 doubles — IEEE-correctly-rounded and therefore bit-identical in Spark
 and DuckDB when written in the same association order; no ln/exp libm
@@ -423,7 +419,7 @@ def dedup_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The distinct-name aggregate has three consumers (both join sides
     and the within-name totals), so it lives in the managed persist
-    scope (plans/shared_cache.py — the `_PAIRS_CACHE` discipline):
+    scope (plans/shared_cache.py, family "fuzzy_names"):
     computed once per (app, sf_dir), explicit unpersist on key change
     or release(). Without the cache the re-derivation cost ~2x the old
     row-level plan's wall time — the price of removing the Theta(D^2)
@@ -1033,10 +1029,7 @@ def text_bpe_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect, the CC/codebook eager-build precedent) whose oracle
     unrolls the rounds into CTEs and replays the merge fold with
     list_reduce — strings and integer counts only, so the hash
-    compare is exact by construction.
-
-    Registered past-window (r6f/r7e precedent: gate-replica verified
-    this round, rotates into the driver window next round)."""
+    compare is exact by construction."""
     return spark.createDataFrame(
         _shared_bpe_merges(spark, sf_dir), _BPE_MERGE_SCHEMA
     ).orderBy("merge_rank")
@@ -1107,10 +1100,7 @@ def text_bpe_encode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagree); per-doc counts are one (doc, word) groupBy joined to
     the vocabulary-sized symbol-length table. The oracle replays
     training and segmentation through the shared _bpe_rounds_ctes
-    chain — integers only, hash-exact by construction.
-
-    Registered past-window (r6f/r7e precedent: gate-replica verified
-    this round, rotates into the driver window next round)."""
+    chain — integers only, hash-exact by construction."""
     return _bpe_doc_token_counts(spark, sf_dir).orderBy("doc_id")
 
 
@@ -1385,11 +1375,7 @@ def corpus_pack_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix-sum (pack_sequences_sharded, bounded window
     partitions via block_size); the oracle replays training,
     segmentation, and the ONE-WINDOW packing spec through the shared
-    _bpe_rounds_ctes chain — integers only, hash-exact.
-
-    Registered past-window (r6f/r11b precedent: gate-replica verified
-    at sf0.001+sf0.01+sf0.1 this round, rotates into the driver
-    window next round)."""
+    _bpe_rounds_ctes chain — integers only, hash-exact."""
     from ..operators.curation import pack_sequences_sharded
 
     counts = _bpe_doc_token_counts(spark, sf_dir).select("doc_id", "n_tokens")

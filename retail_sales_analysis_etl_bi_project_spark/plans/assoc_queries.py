@@ -1069,11 +1069,7 @@ def bi_interpurchase_gap_quartiles(
     Scale shape (100 TB): one fact shuffle on o_custkey for the lag
     window (the sessionization class); then three partitioned
     histogram passes over the gap relation and ~m/1024 phase-2
-    slices.
-
-    Registered past-window (r11b precedent: gate-replica verified at
-    sf0.001+sf0.01+sf0.1 this round, rotates into the driver window
-    next round)."""
+    slices."""
     from ..operators.ranks import selected_ranks
 
     o = load_table(spark, sf_dir, "orders")

@@ -1,6 +1,4 @@
-"""Round-8c retail-BI queries (registered after index_queries, PAST
-the driver window per the r6f/r7e precedent — gate-replica verified
-this round, rotate IN next round):
+"""Round-8c retail-BI queries (registered after index_queries):
 
 - bi_market_basket_pairs : co-purchase affinity — support and lift for
                            every part pair bought together in >= 2

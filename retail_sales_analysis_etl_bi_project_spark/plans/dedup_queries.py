@@ -434,16 +434,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the SAME verified-pairs DataFrame (threshold=0.5, 64 hashes, 16
 # bands). Computing the MinHash chain once per (application, sf_dir,
 # params) and persisting it turns three full-chain recomputations —
-# and every repeat invocation within a bench — into one. The cache is
-# MANAGED, unlike the unmanaged .cache() that leaked storage memory in
-# round 1: at most ONE entry is persisted at a time (a key change
-# unpersists the previous entry before computing the new one), entries
-# are keyed by applicationId (a stopped session frees its blocks with
-# the context), and a hit returns the identical plan a miss would
-# build, so oracle hashes cannot move.
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# and every repeat invocation — into one. The persist is the managed
+# "minhash_pairs" family (plans/shared_cache.py): one entry, evicted on
+# key change and dropped by release(), and a hit returns the identical
+# plan a miss would build, so oracle hashes cannot move.
 def shared_minhash_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -451,16 +445,8 @@ def shared_minhash_pairs(
     num_hashes: int = 64,
     bands: int = 16,
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, num_hashes, bands)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old in _PAIRS_CACHE.values():
-        try:
-            old.unpersist(blocking=False)
-        except Exception:  # a dead context's handle must not fail the query
-            pass
-    _PAIRS_CACHE.clear()
+    from .shared_cache import memo_persist
+
     # r11 (VERDICT item 4): inject the managed signature + shingle
     # persists so the full chain tokenizes the corpus ONCE (sig stage
     # served from the persisted signatures, both verify sides from the
@@ -469,16 +455,18 @@ def shared_minhash_pairs(
     # (dedup_minhash_lsh, the cluster/graph family), so in
     # sampled-truth sweep mode the sampled "minhash_sigs" persist must
     # not leak in here — a full-corpus twin family is used instead.
-    pairs = minhash_dedup_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        signatures=_full_corpus_signatures(spark, sf_dir, num_hashes),
-        shingles=_shared_shingles(spark, sf_dir),
-    ).persist()
-    _PAIRS_CACHE[key] = pairs
-    return pairs
+    return memo_persist(
+        "minhash_pairs",
+        (spark.sparkContext.applicationId, sf_dir, threshold, num_hashes, bands),
+        lambda: minhash_dedup_pairs(
+            load_table(spark, sf_dir, "documents"),
+            threshold=threshold,
+            num_hashes=num_hashes,
+            bands=bands,
+            signatures=_full_corpus_signatures(spark, sf_dir, num_hashes),
+            shingles=_shared_shingles(spark, sf_dir),
+        ),
+    )
 
 
 def _full_corpus_signatures(
@@ -552,37 +540,30 @@ def _cc_oracle(threshold: float = 0.5) -> str:
 # dedup_cluster_components and dedup_graph_stats consume the SAME
 # connected-components output, and the CC rounds run eager actions at
 # plan-BUILD time — recomputing them per query doubled the 4-round
-# iteration in any run executing both. Same managed single-entry cache
-# discipline as _PAIRS_CACHE (one entry, keyed by applicationId,
-# unpersist-on-key-change), and the single definition also removes the
-# copy-pasted max_iters/early_exit literals that could silently drift
-# between the clusters query and its histogram readout.
-_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
+# iteration in any run executing both. The managed "dedup_cc" family
+# keeps one entry per (application, sf_dir), and the single definition
+# also removes the copy-pasted max_iters/early_exit literals that could
+# silently drift between the clusters query and its histogram readout.
 def shared_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old in _CC_CACHE.values():
-        try:
-            old.unpersist(blocking=False)
-        except Exception:  # a dead context's handle must not fail the query
-            pass
-    _CC_CACHE.clear()
-    pairs = shared_minhash_pairs(spark, sf_dir)
+    from .shared_cache import memo_persist
+
     # max_iters=4 covers components far beyond the size-2..4 clusters
     # this corpus plants (2 rounds reach fixpoint at sf0.1); each round
     # is two shuffles, so the bound is also the query's cost knob.
     # early_exit opt-in: the certificate saves 1-2 rounds here
     # (measured diameter 2-3 vs the 4-round bound) at one scalar action
     # per round — the driver tolerates eager builds for this query.
-    cc = connected_components(
-        pairs, src="doc_a", dst="doc_b", max_iters=4, early_exit=True
-    ).persist()
-    _CC_CACHE[key] = cc
-    return cc
+    return memo_persist(
+        "dedup_cc",
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: connected_components(
+            shared_minhash_pairs(spark, sf_dir),
+            src="doc_a",
+            dst="doc_b",
+            max_iters=4,
+            early_exit=True,
+        ),
+    )
 
 
 @query("dedup_cluster_components", oracle=_cc_oracle())
@@ -1385,11 +1366,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair source and the final flag join, so left lazy it was evaluated
     twice per action — 16 corpus-wide cosine argmaxes each time — and
     re-fit on every repeat. The persist build is the identical
-    ivf_assignments plan, so the oracle hash cannot move.
-
-    Registered past-window this round (r6f/r7e precedent:
-    gate-replica verified now, rotates into the driver window next
-    round)."""
+    ivf_assignments plan, so the oracle hash cannot move."""
     from ..operators.similarity import ivf_assignments
     from .shared_cache import memo_persist
 

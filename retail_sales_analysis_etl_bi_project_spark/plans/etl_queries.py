@@ -231,7 +231,7 @@ def etl_silver_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The silver cleaning predicate suite in one realistic pass
     (round-3 merge of the former etl_clean_filters +
     etl_theta_and_positive_filters slots — same operator evidence, one
-    driver window slot): P3 range predicate (age-in-[18,100] analog,
+    registry slot): P3 range predicate (age-in-[18,100] analog,
     etl/etl.py:67) + P10 trim on customer, P4 column-vs-column theta
     (cost<price, etl/etl.py:74) + P5 positivity (quantity>0,
     etl.py:94) on lineitem, composed through the orders FK chain. The

@@ -1,8 +1,4 @@
-"""Round-12d model-evaluation and design-based-sampling queries
-(registered PAST the driver window per the r6f/r11b/r12b/r12c
-precedent: gate-replica verified at sf0.001+sf0.01+sf0.1 this round,
-rotate into the driver window next round — see
-__spark_entry__._PAST_WINDOW).
+"""Round-12d model-evaluation and design-based-sampling queries.
 
 Three mechanisms the surface still lacked — the EVALUATION side of the
 models the engine already trains, plus the sampling design every
@@ -379,8 +375,7 @@ def corpus_pps_systematic_sample(
 # Second eval batch: chance-corrected agreement (Cohen's kappa) for the
 # language-ID heuristic, exact-integer ROC AUC for the MinHash
 # similarity estimator, and a walk-forward forecast backtest (MAE/MASE)
-# over the daily revenue series. Same registration precedent
-# (past-window, gate-verified at all three SFs this round).
+# over the daily revenue series.
 
 from ..operators.dedup import (  # noqa: E402
     BAND_MASK,
@@ -754,8 +749,7 @@ def bi_revenue_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (trend_queries.dense_daily_revenue) — one orders scan serves the
     # whole daily-series family (review finding, r12i). Imported lazily:
     # a module-level import would run trend_queries' @query decorators
-    # mid-module and reshuffle the registration order the rotation
-    # ledger depends on.
+    # mid-module and reshuffle the registration order.
     from .trend_queries import dense_daily_revenue
 
     dense = dense_daily_revenue(spark, sf_dir)
@@ -1451,8 +1445,7 @@ def bi_forecast_interval_coverage(
     # (trend_queries.dense_daily_revenue) — one orders scan serves the
     # whole daily-series family (review finding, r12i). Imported lazily:
     # a module-level import would run trend_queries' @query decorators
-    # mid-module and reshuffle the registration order the rotation
-    # ledger depends on.
+    # mid-module and reshuffle the registration order.
     from .trend_queries import dense_daily_revenue
 
     dense = dense_daily_revenue(spark, sf_dir)

@@ -1,6 +1,4 @@
-"""Round-8b queries (registered after stat_queries, PAST the driver
-window per the r6f/r7e precedent — gate-replica verified this round,
-rotate IN next round):
+"""Round-8b queries (registered after stat_queries):
 
 - text_inverted_index : the posting-list build — term -> document
                         frequency, total term frequency, and a capped
@@ -280,11 +278,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation (each term contributes exactly one row,
     so SUM is order-free), and the fixed-order final addition keeps
     the score deterministic. Top-20 is TakeOrderedAndProject with a
-    doc_id tiebreak — a deterministic cut.
-
-    Registered past-window (r6f/r11b precedent: gate-replica verified
-    at sf0.001+sf0.01+sf0.1 this round, rotates into the driver
-    window next round)."""
+    doc_id tiebreak — a deterministic cut."""
     from .analysis_queries import _shared_tf
 
     k1 = F.lit(_BM25_K1)

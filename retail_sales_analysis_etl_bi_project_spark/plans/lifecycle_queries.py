@@ -1,7 +1,4 @@
-"""Round-6 data-lifecycle queries, registered after pipeline_queries
-and rotated INTO the driver's first-50 correctness window (six spine
-variants spill — see __spark_entry__._PAST_WINDOW and COVERAGE.md
-§"Correctness window rotation").
+"""Round-6 data-lifecycle queries, registered after pipeline_queries.
 
 Contents — the stages of a corpus/warehouse lifecycle the earlier
 families stop short of:
@@ -346,8 +343,7 @@ def agg_numeric_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------ r6c
 # quality-classifier filter + calendar gap-fill (registered after the
-# first lifecycle batch; two more spine variants spill — see
-# __spark_entry__._PAST_WINDOW).
+# first lifecycle batch).
 
 from ..operators.text import QUALITY_CLF_WEIGHTS, quality_classifier  # noqa: E402
 from ..operators.timeseries import calendar_gapfill  # noqa: E402

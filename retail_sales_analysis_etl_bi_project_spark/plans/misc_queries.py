@@ -203,11 +203,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-amortized Arrow, one output row per sampled frame — output
     grain is frames, the natural parallel unit for any downstream
     per-frame model scoring; no shuffle anywhere (the orderBy is the
-    gate's determinism sort).
-
-    Registered past-window (r6f/r11b precedent: gate-replica verified
-    at sf0.001+sf0.01+sf0.1 this round, rotates into the driver
-    window next round)."""
+    gate's determinism sort)."""
     from ..operators.multimodal import documents_as_media, sample_frames
 
     media = documents_as_media(load_table(spark, sf_dir, "documents"))

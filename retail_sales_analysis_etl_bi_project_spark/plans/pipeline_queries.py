@@ -1,8 +1,4 @@
-"""Round-6 pipeline queries, registered after extension_queries and
-rotated INTO the driver's first-50 correctness window (see
-__spark_entry__._PAST_WINDOW and COVERAGE.md §"Correctness window
-rotation" — new queries get driver-hash evidence; long-stable spine
-variants spill to the local gate replica).
+"""Round-6 pipeline queries, registered after extension_queries.
 
 Contents — the curation / audit surface a training-data pipeline needs
 beyond the round-1-5 families, plus two classic BI analyses the

@@ -1,7 +1,8 @@
-"""Query registry: the driver contract (__spark_entry__.py) is generated
-from these dicts. Each registered query is a (spark, sf_dir) -> DataFrame
-builder; most also carry a DuckDB oracle SQL string that must produce
-identical column names, types, and values (the driver hash-compares).
+"""Query registry: the driver contract (__spark_entry__.py) serves these
+dicts as registered, in registration order. Each registered query is a
+(spark, sf_dir) -> DataFrame builder; most also carry a DuckDB oracle
+SQL string that must produce identical column names, types, and values
+(the driver hash-compares).
 
 Queries whose semantics aren't SQL-expressible (LSH bucketing, minhash
 band joins, streaming state) register with oracle=None and get the

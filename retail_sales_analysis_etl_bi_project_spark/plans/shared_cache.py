@@ -6,10 +6,11 @@ caches: a query function returns a lazy plan, so a persist inside it
 would outlive the query with nobody responsible for the memory (the
 documented two-scan tradeoffs in text_tfidf_topterms, dedup_fuzzy_
 name_pairs, and text_corpus_contrast). This module is the managed
-version of that scope — the `_PAIRS_CACHE` discipline from
-plans/dedup_queries.py generalized:
+version of that scope, and every persisted intermediate shared across
+queries goes through it:
 
-- one slot per cache FAMILY (tf table, distinct-names table, ...),
+- one slot per cache FAMILY (dedup verified pairs and clusters, tf
+  table, distinct-names table, ...),
   keyed by (applicationId, sf_dir, params);
 - a key MISS first unpersists and drops every previous entry of that
   family (explicit unpersist: the cache holds at most one persisted

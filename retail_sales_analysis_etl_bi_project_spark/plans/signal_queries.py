@@ -1,7 +1,4 @@
-"""Round-12c distribution-quality and curation-signal queries
-(registered PAST the driver window per the r6f/r11b/r12b precedent:
-gate-replica verified at sf0.001+sf0.01+sf0.1 this round, rotate into
-the driver window next round — see __spark_entry__._PAST_WINDOW).
+"""Round-12c distribution-quality and curation-signal queries.
 
 Three monitoring/curation signals the r12b surface still lacked, each
 a distinct mechanism with an exact DuckDB twin:

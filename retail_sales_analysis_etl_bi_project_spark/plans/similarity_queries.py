@@ -688,11 +688,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered brute-force baseline it extends. At 100 TB the
     shortlist stage rides the IVF machinery over truncated vectors
     (same codebook discipline); this audit is the recall evidence for
-    choosing the dim budget.
-
-    Registered past-window (r6f/r11b precedent: gate-replica verified
-    at sf0.001+sf0.01+sf0.1 this round, rotates into the driver
-    window next round)."""
+    choosing the dim budget."""
     from ..operators.similarity import matryoshka_ranks
 
     d0, d1 = _MRL_DIMS

@@ -1,9 +1,7 @@
 """Round-8 corpus/event statistics queries (registered after
-analysis_queries; the first five enter the driver's 50-query window,
-the r8d/r8e/r8f additions — graph_triangle_counts,
-events_trailing_7d_value, corpus_upsample_epochs, events_cusum_drift —
-register past it for next round's rotation, see
-__spark_entry__._PAST_WINDOW).
+analysis_queries; the r8d/r8e/r8f additions are graph_triangle_counts,
+events_trailing_7d_value, corpus_upsample_epochs and
+events_cusum_drift).
 
 Pipeline stages the round-7 surface still lacked, each a distinct
 mechanism with an exact DuckDB twin:
@@ -1143,11 +1141,7 @@ def graph_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines (see the operator docstring for the truncation
     envelope). Consumes the same shared_minhash_pairs managed cache as
     the rest of the graph family; the oracle unrolls the identical
-    recurrence over the identical verified pairs.
-
-    Registered past-window (r6f/r11b precedent: gate-replica verified
-    at sf0.001+sf0.01+sf0.1 this round, rotates into the driver
-    window next round)."""
+    recurrence over the identical verified pairs."""
     from ..operators.graph import pagerank_fixed_point
 
     return pagerank_fixed_point(

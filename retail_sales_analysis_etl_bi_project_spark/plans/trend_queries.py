@@ -1,7 +1,4 @@
-"""Round-12g statistics over the retail star (registered PAST the
-driver window per the r6f..r12f precedent: gate-replica verified at
-sf0.001+sf0.01+sf0.1 this round, rotate into the driver window next
-round — see __spark_entry__._PAST_WINDOW).
+"""Round-12g statistics over the retail star.
 
 Four statistical mechanisms the BI surface still lacked:
 

@@ -594,11 +594,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined); the rank runs on the DISTINCT-term relation
     (Heaps-sublinear, the documented vocabulary-grain concession);
     each budget's covered mass is a conditional aggregate against the
-    broadcast 5-row budget table.
-
-    Registered past-window (r11b precedent: gate-replica verified at
-    sf0.001+sf0.01+sf0.1 this round, rotates into the driver window
-    next round)."""
+    broadcast 5-row budget table."""
     tf = (
         lower_terms(load_table(spark, sf_dir, "documents"))
         .groupBy("term")

@@ -2,8 +2,8 @@
 term-statistics pipeline (pipeline_term_stats_shared): the r6 VERDICT
 item-5 proof obligations — every tf consumer reads the cached table
 (InMemoryTableScan), the corpus parquet is scanned once, eviction
-unpersists, and the fuzzy-name query's names stage is served from the
-same scope."""
+unpersists, the fuzzy-name query's names stage is served from the
+same scope, and release() tears down the dedup pairs and clusters."""
 
 import io
 from contextlib import redirect_stdout
@@ -224,3 +224,20 @@ def test_tfidf_and_contrast_serve_tf_from_shared_persist(spark):
     # contrast never touches the corpus outside the cached build
     assert len(scan_node_ids(plan)) == 1, plan[:2000]
     shared_cache.release()
+
+
+def test_release_unpersists_dedup_pairs_and_clusters(spark, qs):
+    """The dedup verified-pairs and connected-components persists are
+    memo_persist families, so pipeline teardown (release()) unpersists
+    them like every other shared intermediate instead of leaving them
+    pinned in executor storage."""
+    from pyspark import StorageLevel
+
+    shared_cache.release()
+    pairs = qs["dedup_minhash_lsh"](spark, SF_DIR)
+    clusters = qs["dedup_cluster_components"](spark, SF_DIR)
+    assert pairs.storageLevel != StorageLevel.NONE
+    assert clusters.storageLevel != StorageLevel.NONE
+    shared_cache.release()
+    assert pairs.storageLevel == StorageLevel.NONE
+    assert clusters.storageLevel == StorageLevel.NONE

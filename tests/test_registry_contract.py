@@ -1,53 +1,26 @@
-"""Driver-contract consistency: the correctness window composition in
-__spark_entry__ is position-sensitive (the driver hash-checks the first
-50 registered queries), so a typo in _PAST_WINDOW or a forgotten
-rotation must fail CI, not silently shift which queries get durable
-evidence."""
+"""Driver-contract consistency: queries() and oracle_sql() serve the
+registry as registered, every query has a DuckDB twin except the two
+documented sketch queries, and every output column stays inside the
+leaf types the hash compare is proven safe on."""
 
-import pytest
+from retail_sales_analysis_etl_bi_project_spark.plans import registry
 
 import __spark_entry__ as entrymod
 
 
-def test_window_composition():
+def test_queries_serve_registry_in_registration_order():
+    qs = entrymod.queries()
+    assert list(qs) == list(registry.QUERIES)
+    assert list(entrymod.oracle_sql()) == list(registry.ORACLES)
+
+
+def test_oracle_discipline():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = list(qs)
 
-    # every rotated-out name actually exists (a typo would silently
-    # leave the intended query inside the window and push another out)
-    missing = [n for n in entrymod._PAST_WINDOW if n not in qs]
-    assert not missing, f"_PAST_WINDOW names not in registry: {missing}"
-
-    # promoted names exist, are disjoint from the spill list, and all
-    # land inside the driver's 50-query window (r12: the BPE pair's
-    # natural registration position is past 50, so promotion is the
-    # only thing putting them in — a drift here silently loses their
-    # driver evidence)
-    missing = [n for n in entrymod._PROMOTED if n not in qs]
-    assert not missing, f"_PROMOTED names not in registry: {missing}"
-    assert not set(entrymod._PROMOTED) & set(entrymod._PAST_WINDOW)
-    assert set(entrymod._PROMOTED) <= set(names[:50]), (
-        "promoted queries fell outside the driver window"
-    )
-
-    # the window holds exactly 50 queries; growth without rotation
-    # (or over-rotation) fails here first
-    in_window = [n for n in names if n not in entrymod._PAST_WINDOW]
-    assert len(in_window) == 50, (
-        f"{len(in_window)} in-window queries (driver checks 50): "
-        "rotate _PAST_WINDOW"
-    )
-    # rotation ordering: the dict must serve promoted names first,
-    # then the remaining in-window names in registration order
-    expected = [n for n in entrymod._PROMOTED] + [
-        n for n in in_window if n not in entrymod._PROMOTED
-    ]
-    assert names[:50] == expected
-
-    # oracle discipline: every query has a DuckDB twin except the
-    # documented sketch-family exceptions (DataSketches has no DuckDB
-    # twin; both are tolerance/merge-pinned in tests/test_agg_approx.py)
+    # every query has a DuckDB twin except the documented sketch-family
+    # exceptions (DataSketches has no DuckDB twin; both are
+    # tolerance/merge-pinned in tests/test_agg_approx.py)
     no_oracle = sorted(set(qs) - set(oracles))
     assert no_oracle == [
         "agg_incremental_distinct_hll",
@@ -125,33 +98,3 @@ def test_decimal_output_actually_fails_the_contract(spark, sf_dir):
     leaves = set()
     _leaf_types(df.schema, leaves)
     assert leaves - _SAFE_LEAF_TYPES == {"decimal(38,0)"}
-
-
-def test_rotating_out_an_oracle_less_query_keeps_oracle_sql_working(monkeypatch):
-    """ORACLES legitimately lacks the rows-only sketch queries; since
-    r13 both of them ARE rotated past the window (r12 VERDICT item 7:
-    they can never be driver-hash-green, so they should not hold
-    hash-checkable slots), so assert the lenient/strict split on the
-    real configuration: oracle_sql() stays callable with them rotated
-    out, while queries() still asserts rotation-list drift strictly
-    (review finding, r10b)."""
-    assert "agg_sketch_profile" in entrymod._PAST_WINDOW
-    assert "agg_incremental_distinct_hll" in entrymod._PAST_WINDOW
-    oracles = entrymod.oracle_sql()  # must not raise
-    assert "agg_sketch_profile" not in oracles
-    qs = entrymod.queries()  # name exists in the registry: strict OK
-    names = list(qs)
-    # rotated past the 50-query driver window, into the tail region
-    assert names.index("agg_sketch_profile") >= 50
-    assert names.index("agg_incremental_distinct_hll") >= 50
-
-    monkeypatch.setattr(
-        entrymod,
-        "_PAST_WINDOW",
-        tuple(entrymod._PAST_WINDOW) + ("no_such_query",),
-    )
-    entrymod.oracle_sql()  # lenient: still fine
-    # RuntimeError, not assert: the guard must survive python -O
-    # (r10 ADVICE)
-    with pytest.raises(RuntimeError, match="no_such_query"):
-        entrymod.queries()  # strict: drift fails loudly

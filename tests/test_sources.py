@@ -119,11 +119,15 @@ def test_long_arm_via_parquet_fixture(spark, tmp_path):
     assert out.collect()[0]["ts"] == datetime.datetime(2024, 1, 1, 0, 0, 0, 123456)
 
 
-def test_load_fact_wide_repartitions_narrow_layouts_only(spark, sf_dir, tmp_path):
+def test_load_fact_wide_repartitions_narrow_layouts_only(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """load_fact_wide must widen a single-file scan to cluster width
     (the row-cost-vs-byte-cost fix) but SKIP the shuffle when the file
-    layout already scans at >= half the cluster width — and the rows
-    must be identical either way (r16)."""
+    layout already scans at >= half the cluster width or cannot be
+    counted (a remote URI) — and the rows must be identical either way
+    (r16)."""
+    from retail_sales_analysis_etl_bi_project_spark.sources import tables
     from retail_sales_analysis_etl_bi_project_spark.sources.tables import (
         load_fact_wide,
         load_table,
@@ -150,6 +154,14 @@ def test_load_fact_wide_repartitions_narrow_layouts_only(spark, sf_dir, tmp_path
     a = sorted(r.o_orderkey for r in narrow.select("o_orderkey").collect())
     b = sorted(r.o_orderkey for r in wide.select("o_orderkey").collect())
     assert a == b
+    # remote layout: the file count is unknown, so no blind shuffle
+    monkeypatch.setattr(
+        tables, "load_table", lambda s, _dir, name: load_table(s, sf_dir, name)
+    )
+    remote = load_fact_wide(spark, "s3a://bucket/sf", "orders", "o_orderkey")
+    assert "repartitionbyexpression" not in (
+        remote._jdf.queryExecution().analyzed().toString().lower()
+    )
 
 
 def test_path_sig_sees_rewrites_in_partition_subdirs(spark, tmp_path):

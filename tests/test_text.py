@@ -12,8 +12,6 @@ from retail_sales_analysis_etl_bi_project_spark.operators.text import (
 
 from pyspark.sql import functions as F
 
-from retail_sales_analysis_etl_bi_project_spark.sources.tables import load_table
-
 
 def test_ngram_array_expr_known(spark):
     df = spark.createDataFrame([("a b c d",), ("x",)], "text string")
@@ -181,72 +179,6 @@ def test_bpe_train_merges_early_exit_on_single_symbols(spark):
     # round 2 has no pairs -> loop stops with exactly one merge row
     assert len(rows) == 1
     assert rows[0].merged == "ab"
-
-
-def test_bpe_batched_equals_sequential_on_disjoint_corpus(spark):
-    """Exactness condition of the batched trainer (r11 VERDICT item
-    4): when the snapshot's top pairs are pairwise SYMBOL-DISJOINT,
-    one batched round == ``batch`` sequential rounds, rule for rule
-    and count for count (merging a disjoint pair cannot perturb the
-    others' counts)."""
-    from retail_sales_analysis_etl_bi_project_spark.operators.text import (
-        bpe_train_merges,
-        bpe_train_merges_batched,
-    )
-
-    # four two-char words with distinct letters and distinct freqs:
-    # pairs (x,y)=4 > (q,r)=3 > (s,t)=2 > (u,v)=1, all disjoint
-    docs = spark.createDataFrame(
-        [(1, "xy xy xy xy qr qr qr st st uv")], "doc_id long, text string"
-    )
-    seq = [tuple(r) for r in bpe_train_merges(docs, rounds=4).collect()]
-    bat = [
-        tuple(r)
-        for r in bpe_train_merges_batched(docs, rounds=4, batch=4).collect()
-    ]
-    assert bat == seq
-    assert [m[3] for m in seq] == ["xy", "qr", "st", "uv"]
-
-
-def test_bpe_batched_defers_conflicting_pairs(spark):
-    """A candidate sharing a symbol with an already-selected rule is
-    LEFT FOR THE NEXT ROUND, never applied from the stale snapshot:
-    with (a,b)=5 and (b,c)=3 conflicting on 'b', a batch=2 round
-    selects only (a,b); the next round's fresh counts then pick
-    (b,c) — identical to the sequential trainer."""
-    from retail_sales_analysis_etl_bi_project_spark.operators.text import (
-        bpe_train_merges,
-        bpe_train_merges_batched,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab ab ab bc bc bc")], "doc_id long, text string"
-    )
-    seq = [tuple(r) for r in bpe_train_merges(docs, rounds=2).collect()]
-    bat = [
-        tuple(r)
-        for r in bpe_train_merges_batched(docs, rounds=2, batch=2).collect()
-    ]
-    assert bat == seq
-    assert [m[3] for m in seq] == ["ab", "bc"]
-
-
-def test_bpe_batched_batch1_equals_sequential_on_real_corpus(spark, sf_dir):
-    """batch=1 is the exact sequential trainer by construction — no
-    disjointness assumption needed; pinned on the real documents
-    corpus where adjacent-pair conflicts DO occur."""
-    from retail_sales_analysis_etl_bi_project_spark.operators.text import (
-        bpe_train_merges,
-        bpe_train_merges_batched,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    seq = [tuple(r) for r in bpe_train_merges(docs, rounds=3).collect()]
-    bat = [
-        tuple(r)
-        for r in bpe_train_merges_batched(docs, rounds=3, batch=1).collect()
-    ]
-    assert bat == seq and len(seq) == 3
 
 
 def test_bpe_encode_matches_hand_segmentation(spark):

@@ -16,12 +16,14 @@ import os
 import sys
 from contextlib import redirect_stdout
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
     outdir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3].split(",")
     sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
-    root = sys.argv[5] if len(sys.argv) > 5 else "/root/repo"
+    root = sys.argv[5] if len(sys.argv) > 5 else ROOT
     sys.path.insert(0, root)
 
     from retail_sales_analysis_etl_bi_project_spark.session import get_spark

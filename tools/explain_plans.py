@@ -8,11 +8,13 @@ Usage: python tools/explain_plans.py [sf_dir] > PLANS.txt
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from retail_sales_analysis_etl_bi_project_spark.session import get_spark
 import __spark_entry__ as entrymod

@@ -3,7 +3,8 @@ registered query, record
 
   - build_sec : python plan construction (registered callable; any
                 driver-side fitted-artifact collects land here)
-  - exec_sec  : one timed action (collect()/count(), bench.py's rule)
+  - exec_sec  : one timed action (collect(), or count() for the
+                fact-sized results in COUNT_ONLY_PREFIXES)
   - jobs      : scheduler jobs the action cost
   - scans     : "Scan parquet" node count in the formatted initial plan
                 (repeated-subtree detector — the pattern behind the r15
@@ -12,9 +13,11 @@ registered query, record
   - python_nodes : BatchEvalPython/ArrowEvalPython/MapInPandas/
                 FlatMapGroupsInPandas nodes (JVM<->Python boundaries)
 
-One pass per query (cold within the session, after bench-style
-warm-ups), bench.py's between-queries hygiene so one query's persists
-don't subsidize the next. Output: JSON table to stdout + SWEEP.json.
+One pass per query (cold within the session, after a few warm-ups),
+with between-queries hygiene so one query's persists don't subsidize
+the next. Output: JSON table to stdout + SWEEP.json. ``only_csv``
+restricts the sweep to the named queries, e.g. one cold pass of a
+single query. Warm repeats and run-to-run spread are perfbench's job.
 
 Usage: python tools/sweep_registry.py [sf_dir] [out_path] [only_csv]
 """
@@ -32,7 +35,37 @@ from contextlib import redirect_stdout
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from retail_sales_analysis_etl_bi_project_spark.plans import shared_cache  # noqa: E402
 from retail_sales_analysis_etl_bi_project_spark.session import get_spark  # noqa: E402
+
+# Queries whose result is fact-sized: count() instead of collect() so the
+# sweep measures the plan, not driver materialization of 60k+ rows.
+COUNT_ONLY_PREFIXES = (
+    "etl_fact",
+    "window_customer",
+    "etl_snapshot",
+    "corpus_chunk",
+    "text_tfidf",
+    "pipeline_term",
+)
+
+
+def _post_query_hygiene(spark) -> None:
+    """Between-queries measurement hygiene, on success AND failure:
+
+    - release every memo_persist'd table — it would otherwise stay
+      pinned in executor storage for every SUBSEQUENT query, and
+      System.gc() can't reclaim a live shared_cache reference.
+    - nudge the JVM to free the previous query's dead weight
+      (localCheckpoint blocks, broadcast vars — ContextCleaner only
+      reclaims them after a GC notices the dead references) OUTSIDE any
+      timed window, so one query's garbage doesn't surface as GC pauses
+      billed to the next query."""
+    shared_cache.release()
+    try:
+        spark._jvm.System.gc()
+    except Exception:
+        pass
 
 
 def main() -> None:
@@ -41,7 +74,6 @@ def main() -> None:
     only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 
     import __spark_entry__ as entry
-    from bench import COUNT_ONLY_PREFIXES, _post_query_hygiene
 
     qs = entry.queries()
     spark = get_spark("sweep")
