@@ -14,6 +14,22 @@ reference semantics onto Spark:
   10 MB, so every dim join becomes a broadcast hash join, which is the
   physical plan the reference hand-rolled with dict lookups
   (etl/etl.py:266-282).
+- Generated-code cache of ``CODEGEN_CACHE_ENTRIES`` classes: Spark keeps
+  100 compiled whole-stage classes by default, but the 12 dashboard
+  queries alone cycle ~190, so at the default every warm dashboard
+  round recompiled ~185 of them with Janino (8-26 per query, on the
+  collect path). The bound covers the working sets measured on 4
+  cores: the dashboard deck (190 classes), one ``run_etl`` pass of
+  100k sales rows (124; ~107 recompiled per warm pass at the default),
+  a warm ``stream_ingest`` ingest (0 new classes) and one pass over the
+  whole registry at sf0.001 (3,096 classes; 5,339 compilations at the
+  default). An entry carries ~4.7 KB of bytecode (two generated classes
+  of ~2.3 KB mean on the dashboard), so a full cache holds ~19 MB.
+  ``tools/sweep_registry.py`` re-measures the registry's figure.
+  ``spark.sql.codegen.cache.maxEntries`` is a static conf, read once
+  when the JVM first generates code, so only the first session in a
+  JVM applies it; a later ``get_spark`` in the same JVM keeps that
+  cache.
 """
 
 from __future__ import annotations
@@ -23,6 +39,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Compiled classes kept by Spark's generated-code cache (module docstring).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -69,6 +87,7 @@ def get_spark(
         # engine session enables it up front. Ignored by Spark 3.x.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -12,6 +12,13 @@ registered query, record
   - exchanges : Exchange node count in the formatted initial plan
   - python_nodes : BatchEvalPython/ArrowEvalPython/MapInPandas/
                 FlatMapGroupsInPandas nodes (JVM<->Python boundaries)
+  - codegen_compiles : classes Janino compiled over build plus action
+                (CodegenMetrics compilation count delta). The sum over
+                a pass, printed last, is the registry's generated-code
+                working set less the warm-ups' classes (each class
+                compiles once while the cache holds it): the figure
+                ``session.CODEGEN_CACHE_ENTRIES`` is sized against.
+                Re-check it when queries are added or removed.
 
 One pass per query (cold within the session, after a few warm-ups),
 with between-queries hygiene so one query's persists don't subsidize
@@ -91,12 +98,14 @@ def main() -> None:
             pass
     _post_query_hygiene(spark)
     tracker = spark.sparkContext.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     table: dict[str, dict] = {}
     names = only if only else sorted(qs)
     for name in names:
         row: dict = {}
         try:
+            compiles = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             row["build_sec"] = round(time.perf_counter() - t0, 3)
@@ -124,6 +133,9 @@ def main() -> None:
             row["exec_sec"] = round(time.perf_counter() - t1, 3)
             row["jobs"] = len(set(tracker.getJobIdsForGroup() or []) - jobs_before)
             row["rows"] = n
+            row["codegen_compiles"] = (
+                codegen.METRIC_COMPILATION_TIME().getCount() - compiles
+            )
         except Exception as e:  # noqa: BLE001 — partial table > no table
             row["error"] = f"{type(e).__name__}: {e}"[:200]
         table[name] = row
@@ -139,6 +151,9 @@ def main() -> None:
         reverse=True,
     )[:20]
     print(json.dumps({"top20_total": [[n, round(s, 2)] for s, n in top]}))
+    print(json.dumps({"codegen_compiles": sum(
+        r.get("codegen_compiles", 0) for r in table.values()
+    )}))
 
 
 if __name__ == "__main__":
