@@ -42,11 +42,6 @@ def _registry():
     import retail_sales_analysis_etl_bi_project_spark.plans.signal_queries  # noqa: F401
     import retail_sales_analysis_etl_bi_project_spark.plans.eval_queries  # noqa: F401
     import retail_sales_analysis_etl_bi_project_spark.plans.trend_queries  # noqa: F401
-    import retail_sales_analysis_etl_bi_project_spark.plans.robust_queries  # noqa: F401
-    import retail_sales_analysis_etl_bi_project_spark.plans.retrieval_queries  # noqa: F401
-    import retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries  # noqa: F401
-    import retail_sales_analysis_etl_bi_project_spark.plans.vocab_queries  # noqa: F401
-    import retail_sales_analysis_etl_bi_project_spark.plans.quality_queries  # noqa: F401
     import retail_sales_analysis_etl_bi_project_spark.plans.linalg_queries  # noqa: F401
 
     return registry

@@ -1155,161 +1155,6 @@ def _bpe_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZIPF_RANKS = [1, 2, 4, 8, 16, 32, 64, 128, 256, 512]
-
-
-@query(
-    "text_zipf_profile",
-    oracle=f"""
-    WITH tf AS (
-      SELECT term, CAST(count(*) AS BIGINT) AS freq FROM (
-        SELECT lower(unnest({_SQL_TOKS})) AS term FROM documents)
-      GROUP BY 1
-    ),
-    ranked AS (
-      SELECT term, freq,
-             CAST(row_number() OVER (ORDER BY freq DESC, term) AS BIGINT)
-               AS rank
-      FROM tf
-    ),
-    sel AS (
-      SELECT * FROM ranked WHERE rank IN ({",".join(map(str, _ZIPF_RANKS))})
-    )
-    SELECT a.rank, a.term, a.freq,
-           CAST(a.freq AS DOUBLE) / CAST(b.freq AS DOUBLE)
-             AS ratio_to_double_rank
-    FROM sel a LEFT JOIN sel b ON b.rank = a.rank * 2
-    ORDER BY a.rank
-    """,
-)
-def text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZIPF RANK-FREQUENCY PROFILE of the corpus vocabulary: the term
-    frequency at each power-of-two rank 1..512 plus the ratio to the
-    next sampled rank — the distribution-shape audit behind every
-    df-cap / stopword / vocabulary-size decision (a Zipf exponent s
-    shows up as a ~2^s ratio at every doubling; a flat profile means
-    synthetic or template text, a cliff means a truncated vocabulary).
-    Log-log OLS would need float log sums (partition-order-dependent);
-    the sampled-rank ratios carry the same exponent as exact selected
-    integers and ONE IEEE division per doubling.
-
-    Exactness: frequencies are exact BIGINTs from the term groupBy;
-    the rank is the deterministic (freq desc, term) row_number; the
-    selected ranks are literals shared by both engines; ranks past the
-    vocabulary size simply emit no row (identically), and missing
-    doubled ranks yield NULL ratios on both engines.
-
-    Scale shape (100 TB): one tokenize → term-grain groupBy (the
-    corpus pass, map-side combined); the rank is a global window over
-    VOCABULARY-grain rows (the documented single-partition concession;
-    two-phase rank past ~10⁸ terms); the readout is 10 rows joined to
-    itself."""
-    tf = (
-        lower_terms(load_table(spark, sf_dir, "documents"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-    )
-    ranked = tf.select(
-        "term",
-        "freq",
-        F.row_number()
-        .over(Window.orderBy(F.desc("freq"), "term"))
-        .cast("bigint")
-        .alias("rank"),
-    )
-    sel = ranked.filter(F.col("rank").isin(_ZIPF_RANKS))
-    b = sel.select(
-        F.col("rank").alias("brank"), F.col("freq").alias("bfreq")
-    )
-    return (
-        sel.join(b, F.col("brank") == F.col("rank") * 2, "left")
-        .select(
-            "rank",
-            "term",
-            "freq",
-            (
-                F.col("freq").cast("double") / F.col("bfreq").cast("double")
-            ).alias("ratio_to_double_rank"),
-        )
-        .orderBy("rank")
-    )
-
-
-@query(
-    "text_bpe_fertility_by_lang",
-    oracle="""
-    WITH {ctes},
-    pertf AS (
-      SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-      FROM toksd GROUP BY 1, 2
-    ),
-    vlen AS (
-      SELECT word, CAST(len(syms) AS BIGINT) AS n_bpe FROM syms{k}
-    ),
-    per_doc AS (
-      SELECT p.doc_id,
-             CAST(SUM(p.tf * v.n_bpe) AS BIGINT) AS n_tokens,
-             CAST(SUM(p.tf) AS BIGINT) AS n_words
-      FROM pertf p JOIN vlen v USING (word)
-      GROUP BY 1
-    )
-    SELECT d.lang,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(SUM(pd.n_words) AS BIGINT) AS n_words,
-           CAST(SUM(pd.n_tokens) AS BIGINT) AS n_tokens,
-           CAST(SUM(pd.n_tokens) AS DOUBLE)
-             / CAST(SUM(pd.n_words) AS DOUBLE) AS fertility
-    FROM per_doc pd JOIN documents d USING (doc_id)
-    GROUP BY 1
-    ORDER BY 1
-    """.format(ctes="__CTES__", k=_BPE_ROUNDS).replace(
-        "__CTES__", _bpe_rounds_ctes()
-    ),
-)
-def text_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOKENIZER FERTILITY per language under the trained BPE merges:
-    fertility = BPE tokens per word, by lang — the tokenizer-equity
-    audit every multilingual pipeline publishes (a tokenizer trained on
-    English-heavy data segments other languages into more, smaller
-    pieces; high fertility inflates that language's compute cost and
-    shrinks its effective context window). Reuses the SHARED encode
-    kernel (_bpe_doc_token_counts: one training run, one
-    vocabulary-sized segmentation), so train, encode, packing, and this
-    audit can never disagree on the merges.
-
-    Exactness: per-doc token/word counts are the hash-proven exact
-    BIGINTs of text_bpe_encode_counts; the per-lang rollup sums them
-    (order-free) and fertility is ONE double division. Docs with zero
-    words have no tf rows and drop from every engine identically.
-
-    Scale shape (100 TB): segmentation cost is VOCABULARY-sized, never
-    corpus-sized (the merge fold runs per distinct word); the per-doc
-    counts are one (doc, word) groupBy; this adds a lang-cardinality
-    rollup over doc-grain rows. Nothing new touches the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    per_doc = _bpe_doc_token_counts(spark, sf_dir)
-    return (
-        per_doc.join(docs.select("doc_id", "lang"), "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_words").cast("bigint").alias("n_words"),
-            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_words",
-            "n_tokens",
-            (
-                F.col("n_tokens").cast("double")
-                / F.col("n_words").cast("double")
-            ).alias("fertility"),
-        )
-        .orderBy("lang")
-    )
-
-
 _PACK_BPE_BUDGET = 512
 _PACK_BPE_BLOCK = 64
 

@@ -170,7 +170,10 @@ def k_core_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     average order value (exact sum / exact count -> one deterministic
     double division), A11 exact distinct customers. Two independent
     single-row aggregates crossJoined — each is a map-side partial +
-    one final combine; the crossJoin is 1x1."""
+    one final combine; the crossJoin is 1x1. The broadcast hint pins
+    the join's build side: without it AQE picks the side by which
+    aggregate stage finishes first, and a second final plan compiles
+    its own classes."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     rev = lineitem.agg(sum_money(revenue_expr(), "total_revenue"))
@@ -180,7 +183,7 @@ def k_core_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.countDistinct("o_custkey").alias("n_customers"),
     )
-    return rev.crossJoin(ord_kpis)
+    return rev.crossJoin(F.broadcast(ord_kpis))
 
 
 @query(

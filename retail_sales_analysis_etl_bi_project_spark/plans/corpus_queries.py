@@ -59,12 +59,9 @@ _BENCH_MOD = 97
 def shared_scored_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Managed persist of the SCORED non-benchmark corpus — doc_id,
     source, n_chars, predicted_lang, quality, n_tokens, fp — the
-    regex-heavy scoring pass corpus_filter_pipeline and
-    corpus_curation_funnel both run (and the funnel's plan referenced
-    twice: once under the fingerprint window, once in the attribution
-    join, so the whole pass executed ~2× per action). One definition,
-    one evaluation per run; a production curation job materializes
-    exactly this table between scoring and dedup."""
+    regex-heavy scoring pass of corpus_filter_pipeline, evaluated once
+    per run; a production curation job materializes exactly this table
+    between scoring and dedup."""
     from ..operators.partitioning import to_cluster_width
     from .shared_cache import memo_persist
 
@@ -91,7 +88,7 @@ def shared_scored_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shared_contaminated_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Managed persist of the benchmark-contamination id set (docs
     sharing an 8-gram with the held-out split) — the shingle explode +
-    broadcast gram join both curation queries pay; contamination-set
+    broadcast gram join, evaluated once per run; contamination-set
     size is bounded by the corpus, rows are single ids."""
     from ..operators.partitioning import to_cluster_width
     from .shared_cache import memo_persist
@@ -159,9 +156,8 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-gram shingling are the compute-heavy phase, and a single-file
     corpus would otherwise evaluate them serially at input-file
     granularity (the minhash_signatures discipline). Scoring and the
-    contamination set come from the managed persists shared with
-    corpus_curation_funnel (one scoring pass + one shingle explode per
-    run across the curation family)."""
+    contamination set come from managed persists (one scoring pass +
+    one shingle explode per run)."""
     from pyspark.sql.window import Window
 
     dirty = shared_contaminated_ids(spark, sf_dir)

@@ -889,99 +889,6 @@ def text_countmin_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # literal discipline); 0.12 — the production threshold — is on the grid.
 _LANGID_GRID = [0.04, 0.08, 0.12, 0.16, 0.2, 0.24, 0.28, 0.32]
 
-# Calibration binning: 10 bins of width 0.04 covering the score range
-# [0, 0.4) the stopword ratio actually occupies; scores past 0.4 clamp
-# into the top bin. Width/scale injected as shared literals.
-_CAL_BINS = 10
-_CAL_WIDTH = 0.04
-
-
-@query(
-    "text_langid_calibration",
-    oracle=f"""
-    WITH ratio AS (
-      SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en,
-             CASE WHEN {_SQL_NTOK} > 0
-                  THEN CAST({_SQL_NSTOP} AS DOUBLE)
-                       / CAST({_SQL_NTOK} AS DOUBLE)
-                  ELSE 0.0 END AS r
-      FROM documents
-    ),
-    binned AS (
-      SELECT LEAST(CAST(floor(r / CAST({_CAL_WIDTH!r} AS DOUBLE))
-                        AS BIGINT), {_CAL_BINS - 1}) AS bin,
-             is_en
-      FROM ratio
-    ),
-    agg AS (
-      SELECT bin,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(SUM(is_en) AS BIGINT) AS n_en
-      FROM binned GROUP BY 1
-    )
-    SELECT bin, n_docs, n_en,
-           CAST(n_en AS DOUBLE) / CAST(n_docs AS DOUBLE) AS en_rate,
-           (CAST(bin AS DOUBLE) + CAST(0.5 AS DOUBLE))
-             * CAST({_CAL_WIDTH!r} AS DOUBLE) AS bin_mid,
-           abs(CAST(n_en AS DOUBLE) / CAST(n_docs AS DOUBLE)
-               - (CAST(bin AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                 * CAST({_CAL_WIDTH!r} AS DOUBLE))
-             * CAST(n_docs AS DOUBLE) AS ece_contrib
-    FROM agg
-    ORDER BY bin
-    """,
-)
-def text_langid_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RELIABILITY DIAGRAM of the language-ID score: bin the stopword
-    ratio into 10 fixed-width bins and report each bin's observed
-    en-rate against the bin midpoint — the calibration artifact behind
-    "can this score be used as a probability" (the sweep query picks
-    an operating point; kappa scores one; this asks whether the score
-    MEANS anything between points). Σ ece_contrib / N is the expected
-    calibration error (ECE, bin-midpoint convention — the midpoint
-    stands in for mean confidence so no float summation of per-doc
-    scores enters the statistic).
-
-    Exactness: the ratio is the hash-proven per-doc IEEE division; the
-    bin id is floor(r/width) on identical doubles (LEAST-clamped into
-    the top bin); n/n_en are exact BIGINTs; en_rate is ONE double
-    division (bins with zero docs emit no row, so no zero
-    denominator exists by construction); bin_mid/ece_contrib are
-    pinned double chains over shared literals.
-
-    Scale shape (100 TB): ONE corpus scan computes ratio + bin
-    scan-fused; the rollup is a ≤10-group map-side-combined
-    aggregate. Nothing exceeds bin cardinality after the scan."""
-    docs = load_table(spark, sf_dir, "documents")
-    from ..operators.text import stopword_count_expr
-
-    n_tok = token_count_expr("text").cast("double")
-    n_stop = stopword_count_expr("text").cast("double")
-    ratio = F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0))
-    binned = docs.select(
-        F.least(
-            F.floor(ratio / F.lit(_CAL_WIDTH)).cast("bigint"),
-            F.lit(_CAL_BINS - 1).cast("bigint"),
-        ).alias("bin"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("is_en"),
-    )
-    agg = binned.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("is_en").cast("bigint").alias("n_en"),
-    )
-    rate = F.col("n_en").cast("double") / F.col("n_docs").cast("double")
-    mid = (F.col("bin").cast("double") + F.lit(0.5)) * F.lit(_CAL_WIDTH)
-    return agg.select(
-        "bin",
-        "n_docs",
-        "n_en",
-        rate.alias("en_rate"),
-        mid.alias("bin_mid"),
-        (F.abs(rate - mid) * F.col("n_docs").cast("double")).alias(
-            "ece_contrib"
-        ),
-    ).orderBy("bin")
-
 
 @query(
     "text_langid_threshold_sweep",

@@ -18,6 +18,10 @@ families stop short of:
                            artifact + algebraic sigmoid, r6c)
 - bi_daily_revenue_gapfill: dense calendar series + trailing moving
                            average over date-grain aggregates (r6c)
+- bi_active_customer_churn_jaccard: month-over-month Jaccard of the
+                           active-customer set — the batch twin of the
+                           streaming/churn.py maintainer, which shares
+                           active_month_pairs and churn_jaccard_readout
 """
 
 from __future__ import annotations
@@ -619,4 +623,126 @@ def dedup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         )
         .orderBy("cluster_size")
+    )
+
+
+@query(
+    "bi_active_customer_churn_jaccard",
+    oracle="""
+    WITH am AS (
+      SELECT DISTINCT
+             CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1
+                  AS BIGINT) AS mnum,
+             o_custkey
+      FROM orders),
+    n AS (SELECT mnum, CAST(count(*) AS BIGINT) AS n_active
+          FROM am GROUP BY 1),
+    inter AS (
+      SELECT a.mnum AS mprev, CAST(count(*) AS BIGINT) AS n_retained
+      FROM am a JOIN am b
+        ON a.o_custkey = b.o_custkey AND b.mnum = a.mnum + 1
+      GROUP BY 1)
+    SELECT CAST((np.mnum // 12) * 100 + (np.mnum % 12) + 1
+                AS BIGINT) AS ym_prev,
+           CAST((nn.mnum // 12) * 100 + (nn.mnum % 12) + 1
+                AS BIGINT) AS ym_next,
+           np.n_active AS n_prev,
+           nn.n_active AS n_next,
+           coalesce(i.n_retained, 0) AS n_retained,
+           CAST(coalesce(i.n_retained, 0) AS DOUBLE)
+             / CAST(np.n_active + nn.n_active - coalesce(i.n_retained, 0)
+                    AS DOUBLE) AS jaccard,
+           CAST(coalesce(i.n_retained, 0) AS DOUBLE)
+             / CAST(np.n_active AS DOUBLE) AS retention
+    FROM n np
+    JOIN n nn ON nn.mnum = np.mnum + 1
+    LEFT JOIN inter i ON i.mprev = np.mnum
+    ORDER BY ym_next
+    """,
+)
+def bi_active_customer_churn_jaccard(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MONTH-OVER-MONTH SET CHURN: the Jaccard similarity (and plain
+    retention rate) of consecutive months' active-customer SETS — the
+    base-rotation monitor the revenue aggregates can't see (total
+    revenue can be flat while half the customer base is new every
+    month). The retention-cohort query answers "how long does a
+    cohort live"; this answers "how much of THIS month's base is last
+    month's" — one row per consecutive month pair.
+
+    Exactness: set sizes and intersections are exact BIGINT counts of
+    distinct (month, customer) pairs; Jaccard and retention are one
+    double division each (|A∩B| / (|A|+|B|−|A∩B|), |A∩B|/|A|).
+
+    Scale shape (100 TB): the fact collapses to distinct
+    (month, custkey) — one shuffle on the composite key with map-side
+    combine; the consecutive-month intersection is an equi-join keyed
+    on (custkey, month+1), both sides partitioned by custkey; the
+    readout is month-count rows. No month is compared to more than
+    its immediate successor, so the join fan-out is linear in the
+    active-pair count, never quadratic in months."""
+    am = active_month_pairs(load_table(spark, sf_dir, "orders"))
+    return churn_jaccard_readout(am)
+
+
+def active_month_pairs(orders: DataFrame) -> DataFrame:
+    """DISTINCT (mnum, o_custkey) active pairs — the set relation the
+    churn readout consumes; also maintained incrementally by
+    streaming/churn.py (set union is idempotent, so the stored
+    relation equals this exactly after any drain)."""
+    return orders.select(
+        (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
+        .cast("bigint")
+        .alias("mnum"),
+        "o_custkey",
+    ).distinct()
+
+
+def churn_jaccard_readout(am: DataFrame) -> DataFrame:
+    """Consecutive-month Jaccard/retention readout over an active-pairs
+    relation (shared by the batch query and the streaming monitor's
+    read side — one definition, zero drift)."""
+    n = am.groupBy("mnum").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_active")
+    )
+    a = am.select(F.col("mnum").alias("mprev"), "o_custkey")
+    b = am.select((F.col("mnum") - 1).alias("mprev"), "o_custkey")
+    inter = (
+        a.join(b, ["mprev", "o_custkey"])
+        .groupBy("mprev")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_retained"))
+    )
+
+    def _ym(c):
+        return (
+            F.floor(c / F.lit(12)).cast("bigint") * 100 + (c % 12) + 1
+        ).cast("bigint")
+
+    np_ = n.select(
+        F.col("mnum").alias("mprev"), F.col("n_active").alias("n_prev")
+    )
+    nn = n.select(
+        (F.col("mnum") - 1).alias("mprev"),
+        F.col("n_active").alias("n_next"),
+    )
+    ret = F.coalesce(F.col("n_retained"), F.lit(0))
+    return (
+        np_.join(nn, "mprev")
+        .join(inter, "mprev", "left")
+        .select(
+            _ym(F.col("mprev")).alias("ym_prev"),
+            _ym(F.col("mprev") + 1).alias("ym_next"),
+            "n_prev",
+            "n_next",
+            ret.cast("bigint").alias("n_retained"),
+            (
+                ret.cast("double")
+                / (F.col("n_prev") + F.col("n_next") - ret).cast("double")
+            ).alias("jaccard"),
+            (ret.cast("double") / F.col("n_prev").cast("double")).alias(
+                "retention"
+            ),
+        )
+        .orderBy("ym_next")
     )

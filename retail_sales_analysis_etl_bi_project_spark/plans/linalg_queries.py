@@ -33,8 +33,7 @@ Scale shape (100 TB): one corpus scan builds d² = 4096 exact partial
 sums (map-side combined); the 64×64 moment matrix is a KB fitted
 artifact and all 3 iteration rounds join KB relations — iterating is
 corpus-free. At d where d² partials strain a shuffle (d ≳ 10⁴),
-the swap is blocked outer products (dim-range tiles), same discipline
-as the banded two-phase rank.
+the swap is blocked outer products (dim-range tiles).
 """
 
 from __future__ import annotations

@@ -588,127 +588,6 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("from_type", "to_type")
 
 
-# Stationary-distribution knobs: fixed-point scale and power-iteration
-# round count — literals shared by both engines.
-_STAT_SCALE = 10**12
-_STAT_ROUNDS = 6
-
-
-def _markov_stationary_oracle() -> str:
-    rounds = []
-    for k in range(_STAT_ROUNDS):
-        rounds.append(f"""
-    pi{k + 1} AS (
-      SELECT c.to_type AS s,
-             CAST(SUM((CAST(p.r AS HUGEINT) * c.n_trans) // c.n_from)
-                  AS BIGINT) AS r
-      FROM pi{k} p JOIN c ON p.s = c.from_type
-      GROUP BY 1
-    )""")
-    return f"""
-    WITH o AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS from_type
-      FROM events
-    ),
-    cnt AS (
-      SELECT from_type, event_type AS to_type,
-             CAST(count(*) AS BIGINT) AS n_trans
-      FROM o WHERE from_type IS NOT NULL GROUP BY 1, 2
-    ),
-    c AS (
-      SELECT from_type, to_type, n_trans,
-             CAST(SUM(n_trans) OVER (PARTITION BY from_type) AS BIGINT)
-               AS n_from
-      FROM cnt
-    ),
-    states AS (SELECT DISTINCT from_type AS s FROM c),
-    nst AS (SELECT CAST(count(*) AS BIGINT) AS n FROM states),
-    pi0 AS (
-      SELECT s, CAST({_STAT_SCALE} // nst.n AS BIGINT) AS r
-      FROM states CROSS JOIN nst
-    ),{",".join(rounds)}
-    SELECT s AS event_type,
-           r AS stationary_scaled,
-           CAST(r AS DOUBLE) / CAST({_STAT_SCALE} AS DOUBLE) AS stationary
-    FROM pi{_STAT_ROUNDS}
-    ORDER BY event_type
-    """
-
-
-@query("events_markov_stationary", oracle=_markov_stationary_oracle())
-def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STATIONARY DISTRIBUTION of the fitted event-type Markov chain:
-    six power-iteration rounds π ← πP from the uniform start, in the
-    PageRank family's scaled-BIGINT fixed point (scale 10¹²; each
-    term is (π_i·c_ij) div r_i — floor division loses deterministic
-    sub-ppb mass instead of accumulating float error, so both engines
-    hold the identical integer vector after every round). The
-    steady-state event mix is what the chain PREDICTS the long-run
-    traffic composition to be; comparing it against the observed mix
-    is the drift test for the behavioral model the transitions /
-    markov_eval pair fits and scores.
-
-    Exactness: transition counts and row sums are exact BIGINTs (the
-    hash-proven events_markov_transitions plan); every iteration is
-    integer multiply / floor-divide / sum (HUGEINT/DECIMAL(38,0)
-    products — π·c_ij reaches 10¹⁸ at sf0.1 and beyond int64 at
-    larger corpora); the single double division by the scale happens
-    once at readout.
-
-    Scale shape (100 TB): ONE corpus pass fits the counts (the
-    transitions plan's single user_id shuffle); the chain itself is
-    type-vocabulary-sized (|types|² cells), so six iterations are six
-    joins over a ~25-row table — free at any corpus size."""
-    ev = load_table(spark, sf_dir, "events")
-    seq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cnt = (
-        ev.select(
-            F.lag("event_type").over(seq).alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .where(F.col("from_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_trans"))
-    )
-    c = cnt.select(
-        "from_type",
-        "to_type",
-        "n_trans",
-        F.sum("n_trans")
-        .over(Window.partitionBy("from_type"))
-        .cast("bigint")
-        .alias("n_from"),
-    )
-    states = c.select(F.col("from_type").alias("s")).distinct()
-    nst = states.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    pi = states.crossJoin(F.broadcast(nst)).select(
-        "s", F.expr(f"CAST({_STAT_SCALE} div n AS BIGINT)").alias("r")
-    )
-    for _ in range(_STAT_ROUNDS):
-        pi = (
-            pi.join(c, pi["s"] == c["from_type"])
-            .select(
-                F.col("to_type").alias("s"),
-                F.expr(
-                    "CAST((CAST(r AS DECIMAL(38,0)) * n_trans) div n_from "
-                    "AS BIGINT)"
-                ).alias("term"),
-            )
-            .groupBy("s")
-            .agg(F.sum("term").cast("bigint").alias("r"))
-        )
-    return pi.select(
-        F.col("s").alias("event_type"),
-        F.col("r").alias("stationary_scaled"),
-        (F.col("r").cast("double") / F.lit(float(_STAT_SCALE))).alias(
-            "stationary"
-        ),
-    ).orderBy("event_type")
-
-
 def _triangle_oracle() -> str:
     """DuckDB replay of operators.graph.triangle_counts: identical
     degree computation, (degree, id) row-value orientation, wedge

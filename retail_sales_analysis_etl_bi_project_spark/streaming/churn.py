@@ -1,5 +1,5 @@
 """Streaming active-customer churn maintenance — the streaming form of
-plans/assoc_queries.bi_active_customer_churn_jaccard: a foreachBatch
+plans/lifecycle_queries.bi_active_customer_churn_jaccard: a foreachBatch
 sink that folds each micro-batch's DISTINCT (month, customer) active
 pairs into a stored set relation, so the month-over-month churn
 readout is maintained at delta cost instead of re-scanning the full
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.assoc_queries import active_month_pairs, churn_jaccard_readout
+from ..plans.lifecycle_queries import active_month_pairs, churn_jaccard_readout
 from . import store
 from .events import _await_or_raise
 

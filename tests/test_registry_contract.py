@@ -1,7 +1,12 @@
 """Driver-contract consistency: queries() and oracle_sql() serve the
 registry as registered, every query has a DuckDB twin except the two
 documented sketch queries, and every output column stays inside the
-leaf types the hash compare is proven safe on."""
+leaf types the hash compare is proven safe on. Every registered query
+is also named in COVERAGE.md's mapping tables, so an entry that serves
+no operator, workload or extension family has no row to point at."""
+
+import os
+import re
 
 from retail_sales_analysis_etl_bi_project_spark.plans import registry
 
@@ -12,6 +17,19 @@ def test_queries_serve_registry_in_registration_order():
     qs = entrymod.queries()
     assert list(qs) == list(registry.QUERIES)
     assert list(entrymod.oracle_sql()) == list(registry.ORACLES)
+
+
+def test_every_query_maps_to_a_coverage_row():
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "COVERAGE.md")
+    with open(path, encoding="utf-8") as f:
+        text = f.read()
+    # the mapping tables: §2.1 through the north-star extensions, above
+    # the per-round history sections
+    start = text.index("## §2.1")
+    end = text.index("\n### ", text.index("## North-star extensions"))
+    named = set(re.findall(r"`(\w+)`", text[start:end]))
+    unmapped = [q for q in entrymod.queries() if q not in named]
+    assert not unmapped, unmapped
 
 
 def test_oracle_discipline():

@@ -7,8 +7,8 @@ registered query, record
                 fact-sized results in COUNT_ONLY_PREFIXES)
   - jobs      : scheduler jobs the action cost
   - scans     : "Scan parquet" node count in the formatted initial plan
-                (repeated-subtree detector — the pattern behind the r15
-                MAD/Kendall/curation/copurchase persists)
+                (repeated-subtree detector — the pattern behind the
+                curation and copurchase persists)
   - exchanges : Exchange node count in the formatted initial plan
   - python_nodes : BatchEvalPython/ArrowEvalPython/MapInPandas/
                 FlatMapGroupsInPandas nodes (JVM<->Python boundaries)
