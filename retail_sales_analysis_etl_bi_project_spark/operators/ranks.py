@@ -28,10 +28,15 @@ inside the median bucket is exactly the global rank minus the count
 of the buckets before it. Equal keys always share a bucket (same
 input -> same quantization), so ties are still resolved by the
 explicit tie-break columns, never by partitioning accidents.
-Exactness therefore does not move: every consumer keeps its DuckDB
-oracle hash (`tests/test_ranks.py` additionally pins
+Exactness therefore does not move: `tests/test_ranks.py` and a
+property test in `tests/test_properties.py` pin
 two-phase == single-window on engineered corpora, including
-all-equal-key and boundary-straddling inputs).
+all-equal-key and boundary-straddling inputs.
+
+No registered query calls this module since the Theil–Sen and
+per-group MAD / embedding-norm median queries were removed with the
+other rotation-window statistics; it stays as a tested operator for
+the next order statistic whose input outgrows one partition.
 
 Cost shape at 100 TB: three passes over the (cheap-to-recompute or
 managed-persisted) input relation — a bounds/count aggregate, the
@@ -214,9 +219,8 @@ def grouped_selected_lower_median(
     """PER-GROUP lower median by two-phase histogram rank: one row per
     group — the row at within-group rank (n_g+1) div 2 under
     (key ASC, *tiebreaks ASC) — with a ``__tp_n`` BIGINT column
-    holding the group's row count. The scale rung for the per-group
-    rank-window family (events_value_mad_by_type,
-    embed_norm_stats_by_label): every pass below is partitioned BY THE
+    holding the group's row count. The scale rung for a per-group
+    row_number median window: every pass below is partitioned BY THE
     GROUP KEY and, within phase 2, further by bucket, so no single
     group's full input is ever sorted through one partition — only its
     selected ~n_g/n_buckets bucket slice is.

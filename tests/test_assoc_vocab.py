@@ -1,8 +1,7 @@
-"""Round-14 association / vocabulary query families: hand-computed
-mini-corpora where the statistic is cheap to verify by hand, exact
-structural invariants against the real test corpus otherwise (the
-value-level cross-engine proof is the DuckDB gate; these tests pin the
-SEMANTICS on inputs whose right answer is known independently)."""
+"""Association / vocabulary family entries that stay registered: the
+churn Jaccard batch query on a hand-computed mini-corpus, and exact
+mass-conservation / bounds invariants of the LSH bucket-skew, IVF
+cell-balance and resize-dims audits on the real test corpus."""
 
 import datetime as dt
 
@@ -16,67 +15,8 @@ def _orders(spark, tmp_path, rows):
     return str(tmp_path)
 
 
-def test_spearman_perfect_monotone(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        bi_spearman_rev_qty_daily,
-    )
-
-    # day i: i orders of value 10 each -> revenue and count move
-    # together perfectly -> rho exactly 1.0
-    rows = []
-    k = 1
-    for i in range(1, 6):
-        for _ in range(i):
-            rows.append((k, 1, 10.0, dt.datetime(2024, 1, i)))
-            k += 1
-    sf = _orders(spark, tmp_path, rows)
-    r = bi_spearman_rev_qty_daily(spark, sf).collect()[0]
-    assert r.n_days == 5
-    assert abs(r.spearman_rho - 1.0) < 1e-12
-    assert r.s_num > 0
-
-
-def test_spearman_perfect_inverse(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        bi_spearman_rev_qty_daily,
-    )
-
-    # day i has i orders but TOTAL revenue decreasing -> rho = -1
-    rows = []
-    k = 1
-    for i in range(1, 5):
-        per = float(100 - 20 * i) / i
-        for _ in range(i):
-            rows.append((k, 1, per, dt.datetime(2024, 2, i)))
-            k += 1
-    sf = _orders(spark, tmp_path, rows)
-    r = bi_spearman_rev_qty_daily(spark, sf).collect()[0]
-    assert abs(r.spearman_rho + 1.0) < 1e-12
-
-
-def test_mannwhitney_hand_case(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        bi_weekend_mannwhitney,
-    )
-
-    # 2024-01-01 is a Monday: days 1-5 weekday (rev 10..50),
-    # days 6-7 weekend (rev 60, 70): weekend holds the top 2 ranks.
-    # midrank2 ranks = 2..14 step 2; R1(weekend, x2) = 12*2+14*2? no:
-    # ranks of 60,70 are 6,7 -> r2 = 12,14 -> R1_2 = 26.
-    # U2 = R1_2 - n1(n1+1) = 26 - 6 = 20 -> U = 10 = n1*n2 (max).
-    rows = [
-        (i, 1, float(10 * i), dt.datetime(2024, 1, i)) for i in range(1, 8)
-    ]
-    sf = _orders(spark, tmp_path, rows)
-    r = bi_weekend_mannwhitney(spark, sf).collect()[0]
-    assert (r.n_weekend, r.n_weekday) == (2, 5)
-    assert r.u2_weekend == 20
-    assert r.tie_term == 0
-    assert r.z_score > 1.5  # maximal U on 2x5 -> z = 10/sqrt(...)
-
-
 def test_churn_jaccard_hand_case(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
+    from retail_sales_analysis_etl_bi_project_spark.plans.lifecycle_queries import (
         bi_active_customer_churn_jaccard,
     )
 
@@ -99,193 +39,6 @@ def test_churn_jaccard_hand_case(spark, tmp_path):
     assert (r.n_prev, r.n_next, r.n_retained) == (3, 4, 2)
     assert r.jaccard == 2 / 5
     assert r.retention == 2 / 3
-
-
-def test_chisq_uniform_table_zero_cells(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        events_type_weekday_chisq,
-    )
-
-    # 2 types x 2 weekdays, perfectly balanced -> every chi2_cell == 0
-    rows = []
-    eid = 1
-    for d in (1, 2):  # Mon, Tue of 2024-01
-        for t in ("a", "b"):
-            for _ in range(3):
-                rows.append(
-                    (eid, dt.datetime(2024, 1, d, 12), 1, t, 1.0, None)
-                )
-                eid += 1
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).write.parquet(f"{tmp_path}/events.parquet")
-    out = events_type_weekday_chisq(spark, str(tmp_path)).collect()
-    assert len(out) == 4
-    assert all(r.chi2_cell == 0.0 and r.n_obs == 3 for r in out)
-
-
-def test_benford_shape_and_totals(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        bi_benford_first_digit,
-    )
-
-    out = bi_benford_first_digit(spark, sf_dir).collect()
-    assert [r.digit for r in out] == list(range(1, 10))
-    assert len({r.n_total for r in out}) == 1
-    assert sum(r.n_obs for r in out) == out[0].n_total
-    assert abs(sum(r.benford_frac for r in out) - 1.0) < 1e-12
-    assert all(r.chi2_cell >= 0.0 for r in out)
-
-
-def test_leadlag_comoving_types(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        events_type_leadlag_concordance,
-    )
-
-    # two types with IDENTICAL daily counts 1,2,1,2,... -> lag-0
-    # concordance exactly 1.0 for both ordered pairs
-    rows = []
-    eid = 1
-    for d in range(1, 9):
-        n = 1 if d % 2 else 2
-        for t in ("a", "b"):
-            for _ in range(n):
-                rows.append(
-                    (eid, dt.datetime(2024, 3, d, 6), 1, t, 1.0, None)
-                )
-                eid += 1
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).write.parquet(f"{tmp_path}/events.parquet")
-    out = {
-        (r.type_a, r.type_b, r.lag): r
-        for r in events_type_leadlag_concordance(
-            spark, str(tmp_path)
-        ).collect()
-    }
-    assert out[("a", "b", 0)].concordance == 1.0
-    assert out[("b", "a", 0)].concordance == 1.0
-    # alternating series anti-correlates with itself at lag 1
-    assert out[("a", "b", 1)].concordance == -1.0
-
-
-def test_assortativity_bounds_on_corpus(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        graph_degree_assortativity,
-    )
-
-    r = graph_degree_assortativity(spark, sf_dir).collect()[0]
-    assert r.n_edges > 0 and r.n_nodes > 0
-    if r.assortativity is not None:
-        assert -1.0 <= r.assortativity <= 1.0
-
-
-def test_anova_two_level_week_significant(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        bi_weekday_anova,
-    )
-
-    # 4 weeks from Monday 2024-01-01: Mondays 20, others 10, one
-    # Tuesday 12 so SSW > 0; the weekday effect must dominate
-    rows = []
-    for i in range(28):
-        day = dt.datetime(2024, 1, 1 + i)
-        price = 20.0 if day.weekday() == 0 else 10.0
-        if i == 8:  # second Tuesday
-            price = 12.0
-        rows.append((i + 1, 1, price, day))
-    sf = _orders(spark, tmp_path, rows)
-    r = bi_weekday_anova(spark, sf).collect()[0]
-    assert (r.n_days, r.n_groups) == (28, 7)
-    assert r.ss_between_4 > 0 and r.ss_within_4 > 0
-    assert r.f_stat > 50
-
-
-def test_key_skew_invariants(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.assoc_queries import (
-        join_fact_key_skew,
-    )
-
-    out = join_fact_key_skew(spark, sf_dir).collect()
-    assert 1 <= len(out) <= 10
-    assert [r.rank for r in out] == list(range(1, len(out) + 1))
-    ns = [r.n_rows_key for r in out]
-    assert ns == sorted(ns, reverse=True)
-    assert all(0 < r.share <= 1 and r.skew_ratio >= 1.0 - 1e-9 for r in out[:1])
-
-
-def test_heaps_curve_monotone(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.vocab_queries import (
-        text_heaps_law_curve,
-    )
-
-    out = text_heaps_law_curve(spark, sf_dir).collect()
-    assert [r.cp_eighths for r in out] == [1, 2, 4, 8]
-    for a, b in zip(out, out[1:]):
-        assert a.n_docs <= b.n_docs
-        assert a.vocab_size <= b.vocab_size
-        assert a.n_tokens <= b.n_tokens
-
-
-def test_oov_train_below_one(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.vocab_queries import (
-        text_oov_rate_by_split,
-    )
-
-    out = {r.split: r for r in text_oov_rate_by_split(spark, sf_dir).collect()}
-    assert "train" in out
-    # the sf0.001 synthetic vocabulary fits inside the top-500
-    # cut entirely, so train OOV is legitimately 0 there
-    assert 0.0 <= out["train"].oov_rate < 1.0
-    assert all(r.vocab_size == 500 for r in out.values())
-
-
-def test_neyman_allocation_sums(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.vocab_queries import (
-        corpus_neyman_allocation,
-    )
-
-    out = corpus_neyman_allocation(spark, sf_dir).collect()
-    assert len(out) >= 2
-    assert abs(sum(r.alloc_frac for r in out) - 1.0) < 1e-9
-    assert sum(r.alloc_n for r in out) <= 1000
-    assert all(r.var_num >= 0 and r.s_chars >= 0 for r in out)
-
-
-def test_hapax_bounds(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.vocab_queries import (
-        text_hapax_ratio_by_source,
-    )
-
-    out = text_hapax_ratio_by_source(spark, sf_dir).collect()
-    assert len(out) >= 2
-    for r in out:
-        assert r.n_hapax <= r.vocab_size <= r.n_tokens
-        assert 0.0 <= r.good_turing_unseen <= r.hapax_vocab_ratio <= 1.0
-
-
-def test_doclen_quartiles_hand_case(spark, tmp_path):
-    from retail_sales_analysis_etl_bi_project_spark.plans.vocab_queries import (
-        corpus_doclen_quartiles,
-    )
-
-    rows = [
-        (i, " ".join(["w"] * i), "en", "s", 2 * i - 1) for i in range(1, 10)
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-        "n_chars long"
-    ).write.parquet(f"{tmp_path}/documents.parquet")
-    out = {r.quartile: r for r in corpus_doclen_quartiles(
-        spark, str(tmp_path)).collect()}
-    # m=9: ranks (k*10) div 4 = 2, 5, 7 -> values 2, 5, 7
-    assert (out["q1"].sel_rank, out["q2"].sel_rank, out["q3"].sel_rank) == (
-        2, 5, 7,
-    )
-    assert (out["q1"].n_toks, out["q2"].n_toks, out["q3"].n_toks) == (2, 5, 7)
-    assert all(r.n_docs == 9 for r in out.values())
 
 
 def test_lsh_bucket_skew_mass_conservation(spark, sf_dir):

@@ -690,18 +690,3 @@ def test_semantic_multi_assign_recovers_boundary_pair(spark):
     assert multi[3] == (1, False)  # recovered: dropped via shared cluster
     # untouched vectors keep in both modes
     assert single[0][1] and single[1][1] and multi[0][1] and multi[1][1]
-
-
-def test_lsh_bucket_skew_mass_conservation(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.dedup_queries import (
-        dedup_lsh_bucket_skew,
-    )
-
-    out = dedup_lsh_bucket_skew(spark, sf_dir).collect()
-    n_docs = load_table(spark, sf_dir, "documents").count()
-    # every doc lands in exactly one bucket per band x 16 bands
-    assert sum(r.bucket_size * r.n_buckets for r in out) == 16 * n_docs
-    for r in out:
-        assert r.n_candidate_pairs == r.n_buckets * (
-            r.bucket_size * (r.bucket_size - 1) // 2
-        )

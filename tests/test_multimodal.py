@@ -44,18 +44,3 @@ def test_sample_frames_shape(spark, sf_dir):
     assert frames
     assert all(r.frame_idx % 50 == 0 for r in frames)
     assert all(isinstance(r.frame, (bytes, bytearray)) for r in frames)
-
-
-def test_resize_dims_bounds(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.misc_queries import (
-        multimodal_resize_dims,
-    )
-
-    out = multimodal_resize_dims(spark, sf_dir).collect()
-    n_images = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .count()
-    )
-    assert len(out) == n_images
-    assert all(0 < r.width <= 224 and 0 < r.height <= 224 for r in out)

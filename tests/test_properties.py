@@ -6,6 +6,7 @@ deadline — shrinking still finds minimal counterexamples on failure."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from retail_sales_analysis_etl_bi_project_spark.operators.cdc import snapshot_diff
 from retail_sales_analysis_etl_bi_project_spark.operators.curation import (
@@ -468,3 +469,57 @@ def test_prefix_joins_equal_brute_force_on_random_corpora(
         for r in containment_allpairs_prefix(docs, threshold=threshold).collect()
     }
     assert cb == cf
+
+
+@settings(**_SETTINGS)
+@given(
+    vals=st.lists(
+        st.one_of(
+            st.integers(min_value=-50, max_value=50),
+            st.integers(min_value=-10**12, max_value=10**12),
+        ),
+        min_size=1,
+        max_size=120,
+    ),
+    n_buckets=st.sampled_from([2, 3, 16, 1024]),
+    use_log=st.booleans(),
+)
+def test_two_phase_rank_equals_global_sort(spark, vals, n_buckets, use_log):
+    """selected_ranks == the global row_number pick for EVERY target
+    rank, on adversarial inputs: heavy ties, outlier-stretched ranges,
+    tiny bucket counts, and both bucket-key transforms. The algebraic
+    law the two-phase histogram selection must satisfy exactly."""
+    from retail_sales_analysis_etl_bi_project_spark.operators.ranks import (
+        selected_ranks,
+        signed_log,
+    )
+
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "id long, v double"
+    )
+    m = len(vals)
+    ranks = {
+        "lo": "greatest(1, (__tp_m + 1) div 4)",
+        "med": "(__tp_m + 1) div 2",
+        "hi": "__tp_m",  # the maximum — bucket location's edge case
+    }
+    got = {
+        r["__tp_rank"]: (r.id, r.v)
+        for r in selected_ranks(
+            df,
+            F.col("v"),
+            ["id"],
+            ranks,
+            n_buckets=n_buckets,
+            bucket_key=signed_log(F.col("v")) if use_log else None,
+        ).collect()
+    }
+    ordered = sorted(((v, i) for i, v in enumerate(map(float, vals))))
+    want = {
+        "lo": max(1, (m + 1) // 4),
+        "med": (m + 1) // 2,
+        "hi": m,
+    }
+    for label, target in want.items():
+        v, i = ordered[target - 1]
+        assert got[label] == (i, v), (label, target, vals)

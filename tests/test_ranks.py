@@ -2,8 +2,7 @@
 VERDICT items 1+5): the histogram rank selection must pick the EXACT
 row a single-partition row_number window would — on engineered corpora
 with ties, degenerate (all-equal) key ranges, and bucket-boundary
-values — and the production rungs must equal their exact-window
-siblings on the real test tables."""
+values."""
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -131,74 +130,3 @@ def test_grouped_single_member_groups(spark):
         ).collect()
     }
     assert got == {"a": (1, 5.0), "b": (2, -1.0)}
-
-
-def test_theilsen_production_uses_two_phase_no_global_sort(spark, sf_dir):
-    # the production Theil-Sen plan must not contain a single-partition
-    # window over the PAIR relation: the only SinglePartition exchanges
-    # allowed are the histogram prefix-sum (<= n_buckets rows) and the
-    # selected bucket slice
-    from retail_sales_analysis_etl_bi_project_spark.plans.robust_queries import (
-        bi_revenue_trend_theilsen,
-    )
-
-    df = bi_revenue_trend_theilsen(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the old shape ranked ALL pairs: a Window whose child exchange is
-    # SinglePartition fed directly by the pair join. Now every Window
-    # in the plan must sit behind either the bucket-histogram aggregate
-    # or the located-bucket filter join; cheap structural proxy: the
-    # plan contains the two-phase marker columns
-    assert "__tp_bucket" in plan
-
-
-def test_mad_rung_equals_exact_on_test_corpus(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.robust_queries import (
-        events_value_mad_by_type,
-        events_value_mad_twophase,
-    )
-
-    exact = [tuple(r) for r in events_value_mad_by_type(spark, sf_dir).collect()]
-    rung = [tuple(r) for r in events_value_mad_twophase(spark, sf_dir).collect()]
-    assert rung == exact and len(exact) >= 1
-
-
-def test_embed_norm_rung_equals_exact_on_test_corpus(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.robust_queries import (
-        embed_norm_median_twophase,
-        embed_norm_stats_by_label,
-    )
-
-    exact = {
-        r.label: r.median_norm
-        for r in embed_norm_stats_by_label(spark, sf_dir).collect()
-    }
-    rung = {
-        r.label: r.median_norm
-        for r in embed_norm_median_twophase(spark, sf_dir).collect()
-    }
-    assert rung == exact and len(exact) >= 2
-
-
-def test_mad_dispatch_picks_rung_past_bound(spark, sf_dir, monkeypatch):
-    """r14 VERDICT item 1c: events_value_mad_by_type dispatches by the
-    configurable rows-per-group bound — window form under it, the
-    two-phase rung past it — and both branches emit identical rows."""
-    from retail_sales_analysis_etl_bi_project_spark.plans import robust_queries
-
-    # default bound (10^8): window branch — plan carries the
-    # row_number window, not the two-phase marker columns
-    monkeypatch.delenv("SPARK_GRAFT_MAD_ROWS_PER_GROUP_BOUND", raising=False)
-    win_df = robust_queries.events_value_mad_by_type(spark, sf_dir)
-    win_plan = win_df._jdf.queryExecution().executedPlan().toString()
-    assert "__tp_bucket" not in win_plan
-
-    # bound of 1: every real group exceeds it — rung branch
-    monkeypatch.setenv("SPARK_GRAFT_MAD_ROWS_PER_GROUP_BOUND", "1")
-    rung_df = robust_queries.events_value_mad_by_type(spark, sf_dir)
-    rung_plan = rung_df._jdf.queryExecution().executedPlan().toString()
-    assert "__tp_bucket" in rung_plan
-
-    assert [tuple(r) for r in win_df.collect()] == [
-        tuple(r) for r in rung_df.collect()
-    ]

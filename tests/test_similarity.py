@@ -461,14 +461,3 @@ def test_ivf_multi_assignments_degenerate_cosine_matches_argmax(spark):
     assert {k: v for k, v in got1.items() if k != 0} == {
         k: v for k, v in argmax.items() if k != 0
     }
-
-
-def test_ivf_cell_balance_mass_conservation(spark, sf_dir):
-    from retail_sales_analysis_etl_bi_project_spark.plans.similarity_queries import (
-        sim_ivf_cell_balance,
-    )
-
-    out = sim_ivf_cell_balance(spark, sf_dir).collect()
-    n_vecs = load_table(spark, sf_dir, "embeddings").count()
-    assert sum(r.n_vecs for r in out) == n_vecs
-    assert abs(sum(r.share for r in out) - 1.0) < 1e-9

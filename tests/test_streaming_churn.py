@@ -3,10 +3,7 @@ the maintained set store's readout must equal the batch
 bi_active_customer_churn_jaccard bit-for-bit after draining the
 stream, survive a restart as a no-op, and treat a crash-replayed
 batch id as a no-op (set union is idempotent anyway — the sidecar
-makes the replay cheap, the test proves both layers). A hand-computed
-case pins the batch query's own Jaccard and retention values."""
-
-import datetime as dt
+makes the replay cheap, the test proves both layers)."""
 
 from retail_sales_analysis_etl_bi_project_spark.plans.lifecycle_queries import (
     bi_active_customer_churn_jaccard,
@@ -22,13 +19,6 @@ from retail_sales_analysis_etl_bi_project_spark.streaming.harness import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _orders(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
-    ).write.parquet(f"{tmp_path}/orders.parquet")
-    return str(tmp_path)
 
 
 def test_streamed_churn_equals_batch_and_restart_noop(spark, tmp_path):
@@ -66,25 +56,3 @@ def test_replayed_batch_is_noop_and_set_union_idempotent(spark, tmp_path):
     # even a NEW batch id with the SAME rows cannot change a set store
     apply_churn_batch(orders, 1, target)
     assert sorted(map(tuple, read_churn(spark, target).collect())) == once
-
-
-def test_churn_jaccard_hand_case(spark, tmp_path):
-    # Jan actives {1,2,3}, Feb actives {2,3,4,5}: inter=2, union=5
-    rows = [
-        (1, 1, 10.0, dt.datetime(2024, 1, 5)),
-        (2, 2, 10.0, dt.datetime(2024, 1, 6)),
-        (3, 3, 10.0, dt.datetime(2024, 1, 7)),
-        (4, 2, 10.0, dt.datetime(2024, 2, 1)),
-        (5, 3, 10.0, dt.datetime(2024, 2, 2)),
-        (6, 4, 10.0, dt.datetime(2024, 2, 3)),
-        (7, 5, 10.0, dt.datetime(2024, 2, 4)),
-        (8, 2, 10.0, dt.datetime(2024, 2, 5)),  # dup active pair
-    ]
-    sf = _orders(spark, tmp_path, rows)
-    out = bi_active_customer_churn_jaccard(spark, sf).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.ym_prev, r.ym_next) == (202401, 202402)
-    assert (r.n_prev, r.n_next, r.n_retained) == (3, 4, 2)
-    assert r.jaccard == 2 / 5
-    assert r.retention == 2 / 3
