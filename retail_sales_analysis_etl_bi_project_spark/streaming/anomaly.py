@@ -7,11 +7,8 @@ streaming monitor's flags equal the one-shot batch query bit-for-bit
 (pinned in tests/test_streaming_anomaly.py, including a crash-replayed
 micro-batch).
 
-Same exactly-once recipe as streaming/kpi.py: foreachBatch is
-at-least-once per strictly-increasing batch_id, so every commit is a
-new store version published by one atomic pointer that records the
-batch_id (streaming/store.py), and a replayed id is a no-op. One target
-dir is bound to one checkpoint lineage.
+The fold runs through streaming/store.py's ``fold``, whose published
+batch-id guard makes it exactly-once under crash replay.
 
 State story at 100 TB: the engine holds no state — the store is
 |event_type x day| rows (tiny at any scale), each micro-batch costs a
@@ -27,26 +24,16 @@ from pyspark.sql import functions as F
 
 from ..plans.stat_queries import anomaly_flags, cusum_flags, daily_counts
 from . import store
-from .events import _await_or_raise
+
+
+def _merge_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy("event_type", "day").agg(F.sum("n_events").alias("n_events"))
 
 
 def apply_counts_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one micro-batch's counts into the store. Replay-safe: a
     batch_id at or below the published one is skipped."""
-    ptr = store.current(target)
-    if ptr is not None and batch_id <= ptr["batch_id"]:
-        return  # crash-replayed batch: already folded in
-    new = daily_counts(batch_df)
-    if ptr is not None:
-        merged = (
-            store.read(batch_df.sparkSession, target)
-            .unionByName(new)
-            .groupBy("event_type", "day")
-            .agg(F.sum("n_events").alias("n_events"))
-        )
-    else:
-        merged = new
-    store.commit(merged, target, batch_id)
+    store.fold(batch_df, batch_id, target, daily_counts, _merge_counts)
 
 
 def maintain_volume_stream(
@@ -54,16 +41,12 @@ def maintain_volume_stream(
 ) -> None:
     """Drain ``stream_df`` (availableNow) folding every micro-batch's
     daily counts into the store at ``target``."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: apply_counts_batch(df, bid, target)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_df,
+        lambda df, bid: apply_counts_batch(df, bid, target),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)
 
 
 def anomaly_readout(spark: SparkSession, target: str) -> DataFrame:

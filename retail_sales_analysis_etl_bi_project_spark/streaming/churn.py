@@ -9,10 +9,8 @@ This completes the incremental family with its SET-VALUED member:
 KPI merge folds additive partials, the dedup/novelty stores fold
 append-only keyed relations, and this folds a DISTINCT-set union —
 which is naturally IDEMPOTENT (re-unioning a replayed batch cannot
-change a set), so exactly-once needs no arithmetic guard; the
-published batch_id guard (streaming/store.py) still applies, so a
-replay is a cheap no-op rather than a full rewrite, and every additive
-store honors one uniform contract.
+change a set). It still folds through streaming/store.py's ``fold``,
+so a replay is a cheap no-op rather than a full rewrite.
 
 The readout side calls the SAME churn_jaccard_readout the batch query
 uses — one definition of the statistic, so streamed == batch is an
@@ -32,26 +30,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.lifecycle_queries import active_month_pairs, churn_jaccard_readout
 from . import store
-from .events import _await_or_raise
+
+
+def _merge_pairs(df: DataFrame) -> DataFrame:
+    return df.dropDuplicates(["mnum", "o_custkey"])
 
 
 def apply_churn_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one micro-batch's active pairs into the stored set.
     Replay-safe twice over: set union is idempotent AND a batch_id at
     or below the published one is skipped outright."""
-    ptr = store.current(target)
-    if ptr is not None and batch_id <= ptr["batch_id"]:
-        return
-    new = active_month_pairs(batch_df)
-    if ptr is not None:
-        merged = (
-            store.read(batch_df.sparkSession, target)
-            .unionByName(new)
-            .dropDuplicates(["mnum", "o_custkey"])
-        )
-    else:
-        merged = new
-    store.commit(merged, target, batch_id)
+    store.fold(batch_df, batch_id, target, active_month_pairs, _merge_pairs)
 
 
 def maintain_churn_stream(
@@ -62,16 +51,12 @@ def maintain_churn_stream(
 ) -> None:
     """Drain ``stream_df`` (orders schema, availableNow) folding every
     micro-batch's active pairs into the set store at ``target``."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: apply_churn_batch(df, bid, target)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_df,
+        lambda df, bid: apply_churn_batch(df, bid, target),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)
 
 
 def read_churn(spark: SparkSession, target: str) -> DataFrame:

@@ -12,19 +12,12 @@ per-batch pair outputs equals the one-shot full-corpus dedup
 
 Exactly-once under dirty inputs and crashes:
 - a doc_id re-delivered by the source (duplicate file, upstream
-  replay — the normal input for a dedup system) is dropped by an
+  replay, a fresh checkpoint over the same files) is dropped by an
   anti-join against the store's ingested ids, and within-batch id
-  duplicates collapse first, so a document can never pair with its own
-  stored copy or re-emit its history;
-- the store and the pair output are PARTITIONED BY BATCH
-  (`.../batch=<id>/`) and each batch id overwrites only its own
-  partitions; signatures are deterministic, so a crash-replayed batch
-  rewrites identical content — idempotent with no sidecar;
-- the store's two relations commit non-atomically, so the reader
-  treats the store as present only when BOTH exist and ignores a
-  half-written partition (pairs are written LAST, after the batch's
-  relations are durable and read back — which also means the 64-hash
-  signature pipeline runs ONCE per batch, not once per output).
+  duplicates collapse first, so a document never pairs with its own
+  stored copy or re-emits its history;
+- the store (bands/ + shingles/) and the pair output commit as append
+  stores (streaming/store.py) under the store's next version number.
 
 State story at 100 TB: the streaming engine holds NO state. The store
 grows linearly; each batch costs its own signature computation plus a
@@ -40,20 +33,61 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import pairs_from_relations, signature_store_relations
-from .events import _await_or_raise
+from . import store
 
 
-def _read_part(spark: SparkSession, path: str) -> DataFrame | None:
-    """Store-relation read that treats 'not committed yet' as absent: a
-    missing dir, or one holding only a crashed write's _temporary
-    litter (no readable footer), is None — the replaying batch rebuilds
-    it."""
-    if not os.path.exists(path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+def apply_dedup_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    store_dir: str,
+    pairs_dir: str,
+    threshold: float = 0.5,
+    num_hashes: int = 64,
+    bands: int = 16,
+    n: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_bucket: int | None = None,
+) -> None:
+    """Dedup one document micro-batch against the signature store at
+    ``store_dir``, append its pairs under ``pairs_dir`` and its
+    relations to the store (the foreachBatch body of
+    dedup_stream_against_store)."""
+    spark = batch_df.sparkSession
+    ptr = store.sync_mirror(store_dir, pairs_dir)
+    batch = batch_df.dropDuplicates([id_col])
+    old_b = old_s = None
+    if ptr is not None:
+        old_b = store.scan(spark, store_dir, "bands")
+        old_s = store.scan(spark, store_dir, "shingles")
+        # re-delivered ids are already represented in the store;
+        # processing them again would self-pair and re-emit history
+        batch = batch.join(
+            old_s.select(F.col("did").alias(id_col)), id_col, "left_anti"
+        )
+    if batch.isEmpty():
+        return  # a fully re-delivered batch: nothing to pair or append
+    # compute the batch's relations ONCE: write them, then read back for
+    # candidate generation (the lazy plans would otherwise re-run the
+    # 64-hash pipeline for every downstream action)
+    nb, ns = signature_store_relations(
+        batch, num_hashes=num_hashes, bands=bands, n=n,
+        text_col=text_col, id_col=id_col,
+    )
+    version = store.next_version(ptr)
+    nb_path = store.write_version(nb, os.path.join(store_dir, "bands"), version)
+    ns_path = store.write_version(ns, os.path.join(store_dir, "shingles"), version)
+    pairs = pairs_from_relations(
+        spark.read.parquet(nb_path),
+        spark.read.parquet(ns_path),
+        old_b,
+        old_s,
+        threshold=threshold,
+        max_bucket=max_bucket,
+        sort=False,  # parquet gives no cross-file order anyway
+    )
+    store.write_version(pairs, pairs_dir, version)
+    store.publish_version(store_dir, pairs_dir, version, batch_id)
 
 
 def dedup_stream_against_store(
@@ -75,69 +109,17 @@ def dedup_stream_against_store(
     appending its near-dup pairs under ``pairs_dir``. ``max_bucket``
     passes through to the candidate stage — the hot-bucket cap is the
     production posture for boilerplate bursts (see _bucket_pairs)."""
-    bands_dir = os.path.join(store_dir, "bands")
-    sh_dir = os.path.join(store_dir, "shingles")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        old_b = _read_part(spark, bands_dir)
-        old_s = _read_part(spark, sh_dir)
-        if old_b is None or old_s is None:
-            # the two relations commit separately; a half-written store
-            # (crash between the writes) reads as empty and the
-            # replaying batch rewrites both
-            old_b = old_s = None
-        else:
-            # replay: this batch's own partitions must not read as "old"
-            old_b = old_b.filter(old_b.batch != batch_id).drop("batch")
-            old_s = old_s.filter(old_s.batch != batch_id).drop("batch")
-        batch = batch_df.dropDuplicates([id_col])
-        if old_s is not None:
-            # re-delivered ids are already represented in the store;
-            # processing them again would self-pair and re-emit history
-            batch = batch.join(
-                old_s.select(F.col("did").alias(id_col)), id_col, "left_anti"
-            )
-        if batch.isEmpty():
-            # a fully re-delivered batch: everything already in the
-            # store, nothing to pair or append (writing an empty
-            # relation would also leave a part-less dir that fails
-            # parquet schema inference on read-back)
-            return
-        # compute the batch's relations ONCE: persist them, then read
-        # back for candidate generation (the lazy plans would otherwise
-        # re-run the 64-hash pipeline for every downstream action)
-        nb, ns = signature_store_relations(
-            batch, num_hashes=num_hashes, bands=bands, n=n,
-            text_col=text_col, id_col=id_col,
-        )
-        nb_path = os.path.join(bands_dir, f"batch={batch_id}")
-        ns_path = os.path.join(sh_dir, f"batch={batch_id}")
-        nb.write.mode("overwrite").parquet(nb_path)
-        ns.write.mode("overwrite").parquet(ns_path)
-        pairs = pairs_from_relations(
-            spark.read.parquet(nb_path),
-            spark.read.parquet(ns_path),
-            old_b,
-            old_s,
-            threshold=threshold,
-            max_bucket=max_bucket,
-            sort=False,  # parquet gives no cross-file order anyway
-        )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch={batch_id}")
-        )
-
-    q = (
-        stream_docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_docs,
+        lambda df, bid: apply_dedup_batch(
+            df, bid, store_dir, pairs_dir, threshold, num_hashes, bands, n,
+            text_col, id_col, max_bucket,
+        ),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)
 
 
 def read_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
-    """Accumulated near-dup pairs across every ingested batch."""
-    return spark.read.parquet(pairs_dir).drop("batch")
+    """Accumulated near-dup pairs across every committed batch."""
+    return store.scan(spark, pairs_dir)

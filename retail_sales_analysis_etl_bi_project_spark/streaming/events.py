@@ -249,7 +249,7 @@ def write_stream_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    _await_or_raise(q, timeout_sec)
+    store.await_or_raise(q, timeout_sec)
 
 
 def run_to_memory(
@@ -271,21 +271,8 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    _await_or_raise(q, timeout_sec)
+    store.await_or_raise(q, timeout_sec)
     return spark.table(table_name)
-
-
-def _await_or_raise(q, timeout_sec: int) -> None:
-    """``awaitTermination(timeout)`` returns False on timeout WITHOUT
-    stopping the query — ignoring that bool leaves a zombie query
-    holding partial sink output and checkpoint locks. Stop it and fail
-    loudly instead; exactly-once sinks make the retry safe."""
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} exceeded {timeout_sec}s; "
-            "stopped to avoid a leaked query over partial sink output"
-        )
 
 
 def apply_upsert_batch(
@@ -344,11 +331,9 @@ def upsert_stream_to_parquet(
     (out-of-order files, replays) can never regress the dimension: the
     target converges to latest-per-key regardless of batch order, which
     also makes a checkpoint-replayed batch an exact no-op (idempotent
-    recovery). Each merge is written as a new version of the store and
-    published by an atomic pointer (streaming/store.py); a crash before
-    the publish leaves the previous version current, and readers
-    (``store.read``) only ever see a whole committed version. That full
-    rewrite per batch is the honest non-ACID floor; on a table format
+    recovery). Each merge commits a new version of the store
+    (streaming/store.py). That full rewrite per batch is the honest
+    non-ACID floor; on a table format
     with transactions the SAME foreachBatch body becomes ``MERGE WHEN
     MATCHED [AND newer] UPDATE WHEN NOT MATCHED INSERT`` touching only
     matched files (the Delta arm of upsert_dim shows the exact
@@ -358,13 +343,9 @@ def upsert_stream_to_parquet(
     dedup-within-batch is a bounded per-batch window, and cross-batch
     reconciliation lives in the target table, so nothing accumulates in
     the streaming engine regardless of stream length."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: apply_upsert_batch(df, bid, target, key_cols, order_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_df,
+        lambda df, bid: apply_upsert_batch(df, bid, target, key_cols, order_col),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)

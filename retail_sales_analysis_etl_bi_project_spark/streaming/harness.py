@@ -9,23 +9,20 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def chunked_file_source(
-    df: DataFrame, id_col: str, src: str, n_chunks: int = 3
-) -> int:
-    """Write ``df`` as ``n_chunks`` single-file parquet chunks under
-    ``src`` (chunk i holds rows with ``id_col % n_chunks == i``; empty
-    chunks are skipped) and return the total row count.
+def _write_chunks(df: DataFrame, src: str, chunks: list[Column]) -> int:
+    """Write the rows of ``df`` matching each of ``chunks`` as one
+    single-file parquet chunk under ``src`` (empty chunks are skipped)
+    and return the total row count.
 
     Refuses a source directory that already holds ANY visible file: a
     readStream over ``src`` ingests every non-hidden file it finds, so
     stale content of any name — not just ``chunk_*`` — would be
     replayed alongside the new chunks and the returned count would
-    disagree with what the stream ingests (review findings, r10 +
-    r10-ADVICE: the original guard only matched the ``chunk_`` prefix)."""
+    disagree with what the stream ingests."""
     os.makedirs(src, exist_ok=True)
     stale = [f for f in os.listdir(src) if not f.startswith((".", "_"))]
     if stale:
@@ -34,16 +31,25 @@ def chunked_file_source(
             "a readStream over it would replay them alongside the new "
             "chunks — pass a fresh directory"
         )
-    for i in range(n_chunks):
+    for i, cond in enumerate(chunks):
         stage = f"{src}/_stage_{i}"
-        df.filter(F.pmod(F.col(id_col), n_chunks) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
+        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(stage)
         parts = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-        if parts:  # an empty pmod bucket writes no part file
+        if parts:  # an empty chunk writes no part file
             shutil.move(f"{stage}/{parts[0]}", f"{src}/chunk_{i}.parquet")
         shutil.rmtree(stage)
     return df.count()
+
+
+def chunked_file_source(
+    df: DataFrame, id_col: str, src: str, n_chunks: int = 3
+) -> int:
+    """Write ``df`` as ``n_chunks`` single-file parquet chunks under
+    ``src`` (chunk i holds rows with ``id_col % n_chunks == i``; empty
+    chunks are skipped) and return the total row count. ``src`` must
+    hold no visible file yet."""
+    key = F.col(id_col)
+    return _write_chunks(df, src, [F.pmod(key, n_chunks) == i for i in range(n_chunks)])
 
 
 def range_chunked_file_source(
@@ -56,22 +62,11 @@ def range_chunked_file_source(
     doc_id, so batches must arrive in id order for the streamed union
     to equal the batch query). The 1-row max-id collect is test-scope
     driver work, documented as such."""
-    os.makedirs(src, exist_ok=True)
-    stale = [f for f in os.listdir(src) if not f.startswith((".", "_"))]
-    if stale:
-        raise ValueError(
-            f"source dir {src} already holds files {sorted(stale)}: "
-            "pass a fresh directory"
-        )
     hi = df.agg(F.max(id_col)).collect()[0][0]
     width = int(hi) // n_chunks + 1
-    for i in range(n_chunks):
-        stage = f"{src}/_stage_{i}"
-        df.filter(
-            (F.col(id_col) >= i * width) & (F.col(id_col) < (i + 1) * width)
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        parts = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-        if parts:
-            shutil.move(f"{stage}/{parts[0]}", f"{src}/chunk_{i}.parquet")
-        shutil.rmtree(stage)
-    return df.count()
+    key = F.col(id_col)
+    return _write_chunks(
+        df,
+        src,
+        [(key >= i * width) & (key < (i + 1) * width) for i in range(n_chunks)],
+    )

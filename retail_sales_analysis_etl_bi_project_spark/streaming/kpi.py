@@ -5,15 +5,9 @@ revenue accumulator, functions/money.py) into a stored partials table,
 so the KPI is maintained at delta cost instead of recomputed over the
 full history every trigger.
 
-Unlike the latest-per-key upsert (streaming/events.py), an additive
-merge is NOT naturally idempotent: a crash-replayed micro-batch would
-double-count. foreachBatch's contract is at-least-once per batch_id
-with batch_ids strictly increasing, so exactly-once is recovered the
-standard way: each commit is a new version of the store published by
-one atomic pointer that also records the batch_id (streaming/store.py),
-and a batch whose id is <= the published id is a no-op. One target is
-therefore bound to one checkpoint lineage: a fresh checkpoint restarts
-batch ids at 0 and must come with a fresh target.
+The fold runs through streaming/store.py's ``fold``, whose published
+batch-id guard makes the additive merge exactly-once under crash
+replay (the recipe is in that module's docstring).
 
 State story at 100 TB: the streaming engine holds NO state — partials
 live in the target table at |year×month| rows, each micro-batch costs
@@ -30,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..functions.money import fixed_point_partial
 from . import store
-from .events import _await_or_raise
 
 
 def kpi_partials(
@@ -47,6 +40,13 @@ def kpi_partials(
     )
 
 
+def _merge_partials(df: DataFrame) -> DataFrame:
+    return df.groupBy("year", "month").agg(
+        F.sum("_n").alias("_n"),
+        F.sum("_acc").cast("decimal(38,0)").alias("_acc"),
+    )
+
+
 def apply_kpi_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -56,23 +56,13 @@ def apply_kpi_batch(
 ) -> None:
     """Fold one micro-batch into the partials table. Replay-safe: a
     batch_id at or below the published one is skipped."""
-    ptr = store.current(target)
-    if ptr is not None and batch_id <= ptr["batch_id"]:
-        return  # crash-replayed batch: already folded in
-    new = kpi_partials(batch_df, ts_col, amount_col)
-    if ptr is not None:
-        merged = (
-            store.read(batch_df.sparkSession, target)
-            .unionByName(new)
-            .groupBy("year", "month")
-            .agg(
-                F.sum("_n").alias("_n"),
-                F.sum("_acc").cast("decimal(38,0)").alias("_acc"),
-            )
-        )
-    else:
-        merged = new
-    store.commit(merged, target, batch_id)
+    store.fold(
+        batch_df,
+        batch_id,
+        target,
+        lambda df: kpi_partials(df, ts_col, amount_col),
+        _merge_partials,
+    )
 
 
 def maintain_kpi_stream(
@@ -85,16 +75,12 @@ def maintain_kpi_stream(
 ) -> None:
     """Drain ``stream_df`` (availableNow) folding every micro-batch
     into the partials table at ``target``."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: apply_kpi_batch(df, bid, target, ts_col, amount_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_df,
+        lambda df, bid: apply_kpi_batch(df, bid, target, ts_col, amount_col),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)
 
 
 def read_kpi(spark: SparkSession, target: str) -> DataFrame:

@@ -16,18 +16,11 @@ need min-rewrite retractions — the documented swap is carrying
 (g, min_doc_id) in the store and re-emitting demoted docs, which no
 consumer of a novelty signal has needed.
 
-Exactly-once under dirty inputs and crashes (the dedup.py protocol):
-- re-delivered doc_ids are dropped by an anti-join against the store's
-  ingested-ids relation, and within-batch id duplicates collapse
-  first, so a document can never find its own shingles in the store
-  and re-score as 0-novel;
-- the store relations (ids/ + grams/) and the output are PARTITIONED
-  BY BATCH and each batch id overwrites only its own partitions;
-  shingling is deterministic, so a crash-replayed batch rewrites
-  identical content — idempotent with no sidecar;
-- the store commits ids before grams and the reader treats it as
-  present only when BOTH relations exist, so a half-written store
-  reads as empty and the replaying batch rebuilds it.
+Exactly-once under dirty inputs and crashes, as in dedup.py:
+re-delivered doc_ids are dropped by an anti-join against the store's
+ids/ relation (within-batch duplicates collapse first), so a document
+never re-scores as 0-novel against its own shingles; the store (ids/ +
+grams/) and the output commit as append stores (streaming/store.py).
 
 State story at 100 TB: the streaming engine holds NO state. The store
 grows with the DISTINCT shingle count (sublinear in tokens on real
@@ -45,8 +38,85 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import shingles_from_tokens
 from ..operators.text import tokens_expr
-from .dedup import _read_part
-from .events import _await_or_raise
+from . import store
+
+
+def apply_novelty_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    store_dir: str,
+    out_dir: str,
+    n: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> None:
+    """Score one document micro-batch against the shingle store at
+    ``store_dir``, append its rows under ``out_dir`` and its ids and new
+    shingles to the store (the foreachBatch body of
+    novelty_stream_against_store)."""
+    spark = batch_df.sparkSession
+    ptr = store.sync_mirror(store_dir, out_dir)
+    batch = batch_df.dropDuplicates([id_col])
+    old_g = None
+    if ptr is not None:
+        old_g = store.scan(spark, store_dir, "grams")
+        batch = batch.join(
+            store.scan(spark, store_dir, "ids").select(F.col("did").alias(id_col)),
+            id_col,
+            "left_anti",
+        )
+    if batch.isEmpty():
+        return
+    version = store.next_version(ptr)
+    tall = (
+        batch.select(F.col(id_col), tokens_expr(F.col(text_col)).alias("_toks"))
+        .select(
+            id_col,
+            F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("g"),
+        )
+        .persist()  # three consumers below; batch-sized
+    )
+    try:
+        first = tall.groupBy("g").agg(F.min(id_col).alias("first_doc"))
+        store.write_version(
+            batch.select(F.col(id_col).alias("did")),
+            os.path.join(store_dir, "ids"),
+            version,
+        )
+        new_grams = (
+            first.select("g")
+            if old_g is None
+            else first.select("g").join(old_g, "g", "left_anti")
+        )
+        store.write_version(new_grams, os.path.join(store_dir, "grams"), version)
+        scored = tall.join(first, "g")
+        if old_g is not None:
+            scored = scored.join(old_g.withColumn("_seen", F.lit(True)), "g", "left")
+        else:
+            scored = scored.withColumn("_seen", F.lit(None).cast("boolean"))
+        novel = F.when(
+            (F.col("first_doc") == F.col(id_col)) & F.col("_seen").isNull(), 1
+        ).otherwise(0)
+        per_doc = (
+            scored.groupBy(id_col)
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
+                F.sum(novel).cast("bigint").alias("n_novel"),
+            )
+            .select(
+                id_col,
+                "n_shingles",
+                "n_novel",
+                (
+                    F.col("n_novel").cast("double")
+                    / F.col("n_shingles").cast("double")
+                ).alias("novelty_frac"),
+            )
+        )
+        store.write_version(per_doc, out_dir, version)
+    finally:
+        tall.unpersist()
+    store.publish_version(store_dir, out_dir, version, batch_id)
 
 
 def novelty_stream_against_store(
@@ -63,99 +133,16 @@ def novelty_stream_against_store(
     per-doc novelty against the shingle store at ``store_dir``
     (ids/ + grams/) and appending (doc_id, n_shingles, n_novel,
     novelty_frac) rows under ``out_dir``."""
-    ids_dir = os.path.join(store_dir, "ids")
-    grams_dir = os.path.join(store_dir, "grams")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        old_i = _read_part(spark, ids_dir)
-        old_g = _read_part(spark, grams_dir)
-        if old_i is None or old_g is None:
-            # the two relations commit separately; a half-written store
-            # reads as empty and the replaying batch rewrites both
-            old_i = old_g = None
-        else:
-            # replay: this batch's own partitions must not read as "old"
-            old_i = old_i.filter(old_i.batch != batch_id).drop("batch")
-            old_g = old_g.filter(old_g.batch != batch_id).drop("batch")
-        batch = batch_df.dropDuplicates([id_col])
-        if old_i is not None:
-            batch = batch.join(
-                old_i.select(F.col("did").alias(id_col)), id_col, "left_anti"
-            )
-        if batch.isEmpty():
-            return
-        tall = (
-            batch.select(
-                F.col(id_col), tokens_expr(F.col(text_col)).alias("_toks")
-            )
-            .select(
-                id_col,
-                F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("g"),
-            )
-            .persist()  # three consumers below; batch-sized
-        )
-        try:
-            first = tall.groupBy("g").agg(F.min(id_col).alias("first_doc"))
-            # store commits: ids first, grams second (reader requires both)
-            batch.select(F.col(id_col).alias("did")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(ids_dir, f"batch={batch_id}"))
-            new_grams = (
-                first.select("g")
-                if old_g is None
-                else first.select("g").join(old_g, "g", "left_anti")
-            )
-            new_grams.write.mode("overwrite").parquet(
-                os.path.join(grams_dir, f"batch={batch_id}")
-            )
-            scored = tall.join(first, "g")
-            if old_g is not None:
-                scored = scored.join(
-                    old_g.withColumn("_seen", F.lit(True)), "g", "left"
-                )
-            else:
-                scored = scored.withColumn(
-                    "_seen", F.lit(None).cast("boolean")
-                )
-            novel = F.when(
-                (F.col("first_doc") == F.col(id_col))
-                & F.col("_seen").isNull(),
-                1,
-            ).otherwise(0)
-            per_doc = (
-                scored.groupBy(id_col)
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
-                    F.sum(novel).cast("bigint").alias("n_novel"),
-                )
-                .select(
-                    id_col,
-                    "n_shingles",
-                    "n_novel",
-                    (
-                        F.col("n_novel").cast("double")
-                        / F.col("n_shingles").cast("double")
-                    ).alias("novelty_frac"),
-                )
-            )
-            # output commits LAST, after the store is durable
-            per_doc.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch={batch_id}")
-            )
-        finally:
-            tall.unpersist()
-
-    q = (
-        stream_docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_docs,
+        lambda df, bid: apply_novelty_batch(
+            df, bid, store_dir, out_dir, n, text_col, id_col
+        ),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)
 
 
 def read_novelty(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Accumulated per-doc novelty rows across every ingested batch."""
-    return spark.read.parquet(out_dir).drop("batch")
+    """Accumulated per-doc novelty rows across every committed batch."""
+    return store.scan(spark, out_dir)

@@ -12,11 +12,9 @@ the union of all micro-batches (pinned streamed==batch in
 tests/test_streaming_sketch.py — no tolerance, the deterministic-hash
 property of the batch query carried into streaming).
 
-Exactly-once discipline: identical to streaming/kpi.py — an additive
-merge is not idempotent, so every commit is a new store version
-published by one atomic pointer that records the batch_id
-(streaming/store.py), and a replayed batch id is a no-op. One target
-binds to one checkpoint lineage.
+The fold runs through streaming/store.py's ``fold``, whose published
+batch-id guard makes the additive merge exactly-once under crash
+replay.
 
 State story at 100 TB: the stored table is ≤ CMS_D × CMS_W rows (4096)
 FOREVER — the whole point of sketch maintenance; each micro-batch costs
@@ -31,26 +29,22 @@ from pyspark.sql import functions as F
 
 from ..operators.text import countmin_cells, countmin_entries, term_counts
 from . import store
-from .events import _await_or_raise
+
+
+def _merge_cells(df: DataFrame) -> DataFrame:
+    return df.groupBy("r", "c").agg(F.sum("n").cast("bigint").alias("n"))
 
 
 def apply_sketch_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one document micro-batch's CMS cells into the stored grid.
     Replay-safe: a batch_id at or below the published one is skipped."""
-    ptr = store.current(target)
-    if ptr is not None and batch_id <= ptr["batch_id"]:
-        return  # crash-replayed batch: already folded in
-    new = countmin_cells(term_counts(batch_df))
-    if ptr is not None:
-        merged = (
-            store.read(batch_df.sparkSession, target)
-            .unionByName(new)
-            .groupBy("r", "c")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-        )
-    else:
-        merged = new
-    store.commit(merged, target, batch_id)
+    store.fold(
+        batch_df,
+        batch_id,
+        target,
+        lambda df: countmin_cells(term_counts(df)),
+        _merge_cells,
+    )
 
 
 def maintain_sketch_stream(
@@ -61,16 +55,12 @@ def maintain_sketch_stream(
 ) -> None:
     """Drain ``stream_df`` (availableNow) folding every micro-batch's
     cells into the sketch at ``target``."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: apply_sketch_batch(df, bid, target)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        stream_df,
+        lambda df, bid: apply_sketch_batch(df, bid, target),
+        checkpoint,
+        timeout_sec,
     )
-    _await_or_raise(q, timeout_sec)
 
 
 def read_sketch_cells(spark: SparkSession, target: str) -> DataFrame:

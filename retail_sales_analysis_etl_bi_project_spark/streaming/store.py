@@ -1,27 +1,41 @@
-"""Versioned parquet store with an atomic pointer — the one commit
-protocol of the foreachBatch sinks (streaming/kpi, anomaly, churn,
-sketch and the events upsert).
+"""Versioned parquet stores with an atomic pointer — the one commit
+protocol of the foreachBatch sinks, and the runner that drains a stream
+through a sink.
 
-Layout of a store at ``<target>``:
+Layout of a store at ``<target>``: the JSON pointer ``_CURRENT``
+(``{"version": n, "batch_id": b}``) and immutable parquet version dirs
+``[<relation>/]_v<n>/``. A commit writes its version dirs, then
+publishes the pointer with a tmp file + ``os.replace`` (atomic on a
+POSIX filesystem). A reader resolves the pointer once and scans only
+the versions it names, so it never sees a half-written table. A crash
+before the publish leaves orphan dirs under the next version number,
+which the replayed batch rewrites, so no reaper is needed. Version
+numbers are the store's, never the stream's batch ids.
 
-- ``_v<n>/``: immutable parquet version dirs, one per commit;
-- ``_CURRENT``: the JSON pointer ``{"version": n, "batch_id": b}``.
+- Snapshot stores (``read``/``commit``/``fold``; streaming/kpi,
+  anomaly, churn, sketch and the events upsert): a version is the
+  whole table. ``commit`` keeps the new version and the one before it,
+  so a reader's version stays on disk until a second commit lands.
+- Append stores (``scan``/``write_version``/``publish_version``;
+  streaming/dedup and novelty): a version is one batch's delta under
+  each relation dir, and a reader unions versions 0..n. The sink's
+  output dir is an append store whose pointer is published right after
+  the store's; ``sync_mirror`` repairs one left behind by a crash.
 
-``commit`` writes version ``current + 1``, then publishes the pointer
-with a tmp file + ``os.replace`` (atomic on a POSIX filesystem), then
-drops every version but the new one and the previous one. A reader
-resolves the pointer once and scans that version, so it never sees a
-missing or half-written table: the version it resolved stays on disk
-until a second commit lands. A crash before the publish leaves only an
-orphan dir, which the replayed batch rewrites under the same name, so
-no reaper is needed. The pointer's ``batch_id`` is the replay guard of
-the additive sinks: a batch at or below it is already folded in.
+Exactly-once: foreachBatch delivers each batch at least once, with
+batch ids strictly increasing within one checkpoint. An additive merge
+is not idempotent, so ``fold`` skips a batch whose id is at or below
+the published ``batch_id``. That binds a fold target to one checkpoint
+lineage: a fresh checkpoint restarts ids at 0 and needs a fresh
+target. The append stores instead anti-join away doc ids the store
+already holds, which holds across lineages; the upsert merge is
+idempotent and needs no guard.
 
-The ``_`` prefix hides the version dirs from Spark's file index, so a
-reader that bypasses ``read`` and scans ``<target>`` fails loudly
-instead of silently unioning the retained versions. One writer per
-target, local filesystem only. The same log-and-pointer idea, with
-transactions, is what a table format such as Delta Lake provides.
+The ``_`` prefix hides version dirs from Spark's file index, so a
+reader that bypasses this module fails loudly instead of unioning
+versions. One writer per target, local filesystem only; a table format
+such as Delta Lake provides the same log-and-pointer idea with
+transactions.
 """
 
 from __future__ import annotations
@@ -29,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,8 +67,21 @@ def current(target: str) -> dict | None:
         return None
 
 
+def next_version(ptr: dict | None) -> int:
+    """The version number the next commit after ``ptr`` writes."""
+    return 0 if ptr is None else ptr["version"] + 1
+
+
 def _version_dir(target: str, version: int) -> str:
     return os.path.join(target, f"_v{version}")
+
+
+def write_version(df: DataFrame, target: str, version: int) -> str:
+    """Write ``df`` as version dir ``version`` under ``target`` (replacing
+    a crashed write's orphan) and return its path. Publishes nothing."""
+    path = _version_dir(target, version)
+    df.write.mode("overwrite").parquet(path)
+    return path
 
 
 def read(spark: SparkSession, target: str) -> DataFrame:
@@ -66,11 +94,89 @@ def read(spark: SparkSession, target: str) -> DataFrame:
 
 def commit(df: DataFrame, target: str, batch_id: int) -> None:
     """Write ``df`` as the next version and publish it."""
-    ptr = current(target)
-    version = 0 if ptr is None else ptr["version"] + 1
-    df.write.mode("overwrite").parquet(_version_dir(target, version))
+    version = next_version(current(target))
+    write_version(df, target, version)
     publish(os.path.join(target, POINTER), {"version": version, "batch_id": batch_id})
     keep = {f"_v{version}", f"_v{version - 1}"}
     for name in os.listdir(target):
         if name.startswith("_v") and name not in keep:
             shutil.rmtree(os.path.join(target, name), ignore_errors=True)
+
+
+def fold(
+    batch_df: DataFrame,
+    batch_id: int,
+    target: str,
+    delta: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Fold one micro-batch into the snapshot store at ``target``: commit
+    ``delta(batch_df)``, or ``merge(read(target) ∪ delta(batch_df))``
+    once the store exists. A batch id at or below the published one is
+    already folded in and is skipped."""
+    ptr = current(target)
+    if ptr is not None and batch_id <= ptr["batch_id"]:
+        return  # crash-replayed batch: already folded in
+    new = delta(batch_df)
+    if ptr is not None:
+        new = merge(read(batch_df.sparkSession, target).unionByName(new))
+    commit(new, target, batch_id)
+
+
+def scan(spark: SparkSession, target: str, relation: str = "") -> DataFrame:
+    """Every published version of an append store's ``relation``."""
+    ptr = current(target)
+    if ptr is None:
+        raise FileNotFoundError(f"no committed version under {target}")
+    rel = os.path.join(target, relation)
+    return spark.read.parquet(
+        *(_version_dir(rel, v) for v in range(ptr["version"] + 1))
+    )
+
+
+def publish_version(target: str, mirror: str, version: int, batch_id: int) -> None:
+    """Publish ``version`` of the append store at ``target``, then of its
+    output dir ``mirror``: every version dir under both is written."""
+    doc = {"version": version, "batch_id": batch_id}
+    publish(os.path.join(target, POINTER), doc)
+    publish(os.path.join(mirror, POINTER), doc)
+
+
+def sync_mirror(target: str, mirror: str) -> dict | None:
+    """The append store's published pointer, re-published to ``mirror``
+    if a crash between the two publishes left the mirror behind."""
+    ptr = current(target)
+    if ptr is not None and current(mirror) != ptr:
+        publish(os.path.join(mirror, POINTER), ptr)
+    return ptr
+
+
+def await_or_raise(q, timeout_sec: int) -> None:
+    """``awaitTermination(timeout)`` returns False on timeout WITHOUT
+    stopping the query — ignoring that bool leaves a zombie query
+    holding partial sink output and checkpoint locks. Stop it and fail
+    loudly instead; exactly-once sinks make the retry safe."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} exceeded {timeout_sec}s; "
+            "stopped to avoid a leaked query over partial sink output"
+        )
+
+
+def drain(
+    stream_df: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    timeout_sec: int,
+) -> None:
+    """Run ``body(batch_df, batch_id)`` on every micro-batch of
+    ``stream_df`` until the source is drained (availableNow)."""
+    q = (
+        stream_df.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_or_raise(q, timeout_sec)

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from retail_sales_analysis_etl_bi_project_spark.sources.tables import load_table
 from retail_sales_analysis_etl_bi_project_spark.streaming.events import (
-    _await_or_raise,
     read_events_stream,
 )
+from retail_sales_analysis_etl_bi_project_spark.streaming.store import await_or_raise
 from retail_sales_analysis_etl_bi_project_spark.streaming.stateful import (
     tws_runtime_available,
     user_profile_stream,
@@ -59,7 +59,7 @@ def test_stateful_user_profile_matches_batch(spark, sf_dir, tmp_path, api):
         .trigger(availableNow=True)
         .start()
     )
-    _await_or_raise(q, 120)
+    await_or_raise(q, 120)
     got = spark.table(table).toPandas()
     # last emission per user carries the final cumulative state
     final = got.groupby("user_id").last()

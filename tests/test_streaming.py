@@ -150,8 +150,8 @@ def test_await_or_raise_stops_zombie_query_on_timeout(spark):
     """A query that outlives its timeout must be STOPPED and surfaced as
     an error — awaitTermination's False return was previously ignored,
     leaking a live query over partial sink output (r3 ADVICE)."""
-    from retail_sales_analysis_etl_bi_project_spark.streaming.events import (
-        _await_or_raise,
+    from retail_sales_analysis_etl_bi_project_spark.streaming.store import (
+        await_or_raise,
     )
 
     q = (
@@ -164,7 +164,7 @@ def test_await_or_raise_stops_zombie_query_on_timeout(spark):
         .start()
     )
     with pytest.raises(TimeoutError):
-        _await_or_raise(q, 1)
+        await_or_raise(q, 1)
     assert not q.isActive
 
 

@@ -3,7 +3,11 @@ with in-id-order batches, the union of per-batch outputs must equal
 the one-shot corpus_ngram_novelty bit-for-bit; a restart with the
 drained source re-emits nothing; re-delivered docs are dropped."""
 
+import glob
 import os
+
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from retail_sales_analysis_etl_bi_project_spark.plans.signal_queries import (
     corpus_ngram_novelty,
@@ -95,3 +99,42 @@ def test_redelivered_batch_is_dropped(spark, tmp_path):
     )
     after = sorted(map(tuple, read_novelty(spark, out).collect()))
     assert after == before
+
+
+def test_fresh_checkpoint_appends_to_the_store(spark, tmp_path):
+    """A fresh checkpoint restarts batch ids at 0. Its batches must
+    append to the store after the first lineage's, not overwrite the
+    first lineage's batches that carry the same ids."""
+    src, docs = _source(spark, tmp_path)
+    store, out, _ = _run(spark, docs, src, tmp_path)
+    first = set(map(tuple, read_novelty(spark, out).collect()))
+
+    # copies of every 7th document under ids no lineage has seen
+    extra = docs.filter(F.pmod(F.col("doc_id"), 7) == 0).withColumn(
+        "doc_id", F.col("doc_id") + 100_000
+    )
+    src2 = str(tmp_path / "docs_src2")
+    range_chunked_file_source(extra, "doc_id", src2, 1)
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src2)
+    )
+    novelty_stream_against_store(stream, store, out, str(tmp_path / "ckpt2"))
+
+    # every doc id in the store's id files, read straight off disk
+    stored = {
+        i
+        for f in glob.glob(
+            os.path.join(store, "ids", "**", "*.parquet"), recursive=True
+        )
+        for i in pq.read_table(f, columns=["did"]).column("did").to_pylist()
+    }
+    want_ids = {r.doc_id for r in docs.unionByName(extra).select("doc_id").collect()}
+    assert stored == want_ids
+    got = set(map(tuple, read_novelty(spark, out).collect()))
+    assert first and first <= got
+    # a copy's shingles are all in the store: nothing in it is novel
+    copies = [r for r in read_novelty(spark, out).collect() if r.doc_id >= 100_000]
+    assert len(copies) == extra.count()
+    assert all(r.n_novel == 0 for r in copies)

@@ -1,7 +1,8 @@
 """The versioned-store commit protocol (streaming/store.py) at its commit
-boundary, for each of the five foreachBatch sinks: a crash between the
+boundary, for each of the seven foreachBatch sinks: a crash between the
 version write and the pointer publish, and a reader running while the
-writer commits."""
+writer commits. The five snapshot sinks share one pair of tests and
+the two append sinks (dedup, novelty) a twin pair."""
 
 import os
 import threading
@@ -19,12 +20,20 @@ from retail_sales_analysis_etl_bi_project_spark.streaming.churn import (
     apply_churn_batch,
     read_churn,
 )
+from retail_sales_analysis_etl_bi_project_spark.streaming.dedup import (
+    apply_dedup_batch,
+    read_pairs,
+)
 from retail_sales_analysis_etl_bi_project_spark.streaming.events import (
     apply_upsert_batch,
 )
 from retail_sales_analysis_etl_bi_project_spark.streaming.kpi import (
     apply_kpi_batch,
     read_kpi,
+)
+from retail_sales_analysis_etl_bi_project_spark.streaming.novelty import (
+    apply_novelty_batch,
+    read_novelty,
 )
 from retail_sales_analysis_etl_bi_project_spark.streaming.sketch import (
     apply_sketch_batch,
@@ -38,6 +47,12 @@ SINKS = {
     "churn": ("orders", "o_orderkey", apply_churn_batch, read_churn),
     "sketch": ("documents", "doc_id", apply_sketch_batch, read_sketch_cells),
     "upsert": ("events", "event_id", apply_upsert_batch, store.read),
+}
+
+# append sink -> (batch body, output readout, one of its store relations)
+APPEND_SINKS = {
+    "dedup": (apply_dedup_batch, read_pairs, "bands"),
+    "novelty": (apply_novelty_batch, read_novelty, "ids"),
 }
 
 
@@ -124,3 +139,114 @@ def test_reader_during_commit_sees_whole_committed_states(
     assert not errors, errors[0]
     assert len(committed) == 6 and seen
     assert all(s in committed for s in seen)
+
+
+def _doc_batches(spark, sf_dir, n):
+    df = load_table(spark, sf_dir, "documents")
+    return [df.filter(F.pmod(F.col("doc_id"), n) == i) for i in range(n)]
+
+
+def _out(target):
+    return target + "_out"
+
+
+@pytest.mark.parametrize("sink", APPEND_SINKS)
+def test_append_crash_before_publish_keeps_state_and_replay_matches(
+    spark, sf_dir, tmp_path, monkeypatch, sink
+):
+    apply, readout, relation = APPEND_SINKS[sink]
+    batches = _doc_batches(spark, sf_dir, 3)
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for bid, b in enumerate(batches):
+        apply(b, bid, clean, _out(clean))
+    want = _rows(readout(spark, _out(clean)))
+
+    apply(batches[0], 0, crashed, _out(crashed))
+    before = _rows(readout(spark, _out(crashed)))
+    publish = store.publish
+
+    def crash_at(n):
+        calls = []
+
+        def crashing(path, doc):
+            calls.append(path)
+            if len(calls) == n:
+                raise RuntimeError("killed before publish")
+            publish(path, doc)
+
+        return crashing
+
+    # killed before the store's publish: the version dirs are orphans
+    with monkeypatch.context() as m:
+        m.setattr(store, "publish", crash_at(1))
+        with pytest.raises(RuntimeError, match="before publish"):
+            apply(batches[1], 1, crashed, _out(crashed))
+    assert os.path.isdir(os.path.join(crashed, relation, "_v1"))
+    assert os.path.isdir(os.path.join(_out(crashed), "_v1"))
+    assert store.current(crashed) == {"version": 0, "batch_id": 0}
+    assert _rows(readout(spark, _out(crashed))) == before
+
+    # killed between the store's publish and the output's: the output
+    # stays one version behind until the replay re-publishes it
+    with monkeypatch.context() as m:
+        m.setattr(store, "publish", crash_at(2))
+        with pytest.raises(RuntimeError, match="before publish"):
+            apply(batches[1], 1, crashed, _out(crashed))
+    assert store.current(crashed) == {"version": 1, "batch_id": 1}
+    assert store.current(_out(crashed)) == {"version": 0, "batch_id": 0}
+    assert _rows(readout(spark, _out(crashed))) == before
+
+    # restart: the stream replays batch 1, then runs batch 2
+    for bid, b in enumerate(batches[1:], start=1):
+        apply(b, bid, crashed, _out(crashed))
+    assert _rows(readout(spark, _out(crashed))) == want
+    assert store.current(_out(crashed)) == store.current(crashed)
+    # a second replay of the last batch appends nothing
+    apply(batches[-1], len(batches) - 1, crashed, _out(crashed))
+    assert _rows(readout(spark, _out(crashed))) == want
+    assert len(os.listdir(os.path.join(crashed, relation))) == 3
+
+
+@pytest.mark.parametrize("sink", APPEND_SINKS)
+def test_append_reader_during_commit_sees_whole_committed_states(
+    spark, sf_dir, tmp_path, sink
+):
+    apply, readout, relation = APPEND_SINKS[sink]
+    batches = _doc_batches(spark, sf_dir, 6)
+    target = str(tmp_path / "store")
+    out = _out(target)
+
+    def state():
+        return (
+            _rows(readout(spark, out)),
+            _rows(store.scan(spark, target, relation)),
+        )
+
+    apply(batches[0], 0, target, out)
+    committed = [state()]
+    seen, errors, done = [], [], threading.Event()
+
+    def reader():
+        while not done.is_set():
+            try:
+                seen.append(state())
+            except Exception as e:  # any failure is the finding
+                errors.append(e)
+                return
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for bid, b in enumerate(batches[1:], start=1):
+            apply(b, bid, target, out)
+            committed.append(state())
+    finally:
+        done.set()
+        t.join(timeout=300)
+    assert not t.is_alive()
+    assert not errors, errors[0]
+    assert len(committed) == 6 and seen
+    # the output and the store publish one after the other, so each is
+    # checked against its own committed states
+    outs, rels = ([c[k] for c in committed] for k in (0, 1))
+    assert all(o in outs and r in rels for o, r in seen)
