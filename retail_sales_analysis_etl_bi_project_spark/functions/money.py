@@ -61,6 +61,15 @@ def sum_money(col: Column, alias: str) -> Column:
 # and floor would truncate the ones sitting just below it, turning a
 # 33.01 into 33.009999.)
 
+def fixed_point_units(col: Column | str, scale: int = 6) -> Column:
+    """One value's exact scaled units, round(x * 10^scale) as
+    decimal(28,0): the per-row term that fixed_point_sum and
+    fixed_point_partial sum. A store that folds raw rows and stored
+    partials in one aggregate (streaming/kpi.py) sums these directly."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c * F.lit(float(10**scale))).cast("decimal(28,0)")
+
+
 def fixed_point_sum(col: Column | str, scale: int = 6) -> Column:
     """Deterministic cross-engine SUM of a double column: quantize to
     ``scale`` decimal digits in double arithmetic (round of x * 10^scale
@@ -80,11 +89,8 @@ def fixed_point_sum(col: Column | str, scale: int = 6) -> Column:
       O(1e3) values = ~1e20 scaled units) still 8 orders of headroom,
       so the accumulator is never the binding constraint; the per-value
       2^53 bound is."""
-    c = F.col(col) if isinstance(col, str) else col
-    factor = float(10**scale)
-    return (
-        F.sum(F.round(c * F.lit(factor)).cast("decimal(28,0)")).cast("double")
-        / F.lit(factor)
+    return F.sum(fixed_point_units(col, scale)).cast("double") / F.lit(
+        float(10**scale)
     )
 
 
@@ -106,9 +112,7 @@ def fixed_point_partial(col: Column | str, scale: int = 6) -> Column:
     one-pass fixed_point_sum bit-for-bit — the algebraic-aggregate
     contract that makes incremental materialized-view maintenance
     exact (see plans/agg_queries.py agg_incremental_kpi_merge)."""
-    c = F.col(col) if isinstance(col, str) else col
-    factor = float(10**scale)
-    return F.sum(F.round(c * F.lit(factor)).cast("decimal(28,0)"))
+    return F.sum(fixed_point_units(col, scale))
 
 
 def fixed_point_final(acc: Column | str, scale: int = 6) -> Column:

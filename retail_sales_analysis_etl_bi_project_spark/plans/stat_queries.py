@@ -440,16 +440,30 @@ def events_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anomaly_flags(daily_counts(load_table(spark, sf_dir, "events")))
 
 
+def daily_rows(df: DataFrame) -> DataFrame:
+    """Each event as one (event_type, day, n_events=1) row — THE
+    day-grain definition shared by the batch query above and the
+    streaming monitor (streaming/anomaly.py), which folds these rows
+    and its stored counts in one sum_daily_counts. Counts are additive,
+    so the streamed store merged over any batch split equals the
+    one-pass daily_counts exactly, but only while both paths collapse
+    days identically — hence one definition, not two."""
+    return df.select(
+        "event_type", F.to_date("ts").alias("day"), F.lit(1).alias("n_events")
+    )
+
+
+def sum_daily_counts(rows: DataFrame) -> DataFrame:
+    """Collapse daily_rows and/or stored day counts to one
+    (event_type, day) row each."""
+    return rows.groupBy("event_type", "day").agg(
+        F.sum("n_events").alias("n_events")
+    )
+
+
 def daily_counts(df: DataFrame) -> DataFrame:
-    """Per-(event_type, day) count collapse — THE day-grain definition
-    shared by the batch query above and the streaming monitor's
-    per-batch partials (streaming/anomaly.py): counts are additive, so
-    the streamed store merged over any batch split equals this
-    one-pass form exactly, but only while both paths collapse days
-    identically — hence one definition, not two."""
-    return df.groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
+    """Per-(event_type, day) count collapse of raw events."""
+    return sum_daily_counts(daily_rows(df))
 
 
 def _with_daily_moments(daily: DataFrame) -> DataFrame:

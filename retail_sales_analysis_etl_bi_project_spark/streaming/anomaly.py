@@ -11,29 +11,29 @@ The fold runs through streaming/store.py's ``fold``, whose published
 batch-id guard makes it exactly-once under crash replay.
 
 State story at 100 TB: the engine holds no state — the store is
-|event_type x day| rows (tiny at any scale), each micro-batch costs a
-map-side-combined count of the delta plus a merge over the store, and
-the readout's per-type moments are a groupBy over the day-grain store,
-never the raw stream.
+|event_type x day| rows (tiny at any scale). Each micro-batch costs ONE
+map-side-combined sum over the batch's per-event rows (daily_rows)
+together with the stored counts, and the readout's per-type moments
+are a groupBy over the day-grain store, never the raw stream.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..plans.stat_queries import anomaly_flags, cusum_flags, daily_counts
+from ..plans.stat_queries import (
+    anomaly_flags,
+    cusum_flags,
+    daily_rows,
+    sum_daily_counts,
+)
 from . import store
-
-
-def _merge_counts(df: DataFrame) -> DataFrame:
-    return df.groupBy("event_type", "day").agg(F.sum("n_events").alias("n_events"))
 
 
 def apply_counts_batch(batch_df: DataFrame, batch_id: int, target: str) -> None:
     """Fold one micro-batch's counts into the store. Replay-safe: a
     batch_id at or below the published one is skipped."""
-    store.fold(batch_df, batch_id, target, daily_counts, _merge_counts)
+    store.fold(batch_df, batch_id, target, daily_rows, sum_daily_counts)
 
 
 def maintain_volume_stream(
@@ -53,7 +53,7 @@ def anomaly_readout(spark: SparkSession, target: str) -> DataFrame:
     """Flags over the maintained store — the SAME expressions as the
     batch query (plans/stat_queries.anomaly_flags), so streaming-
     maintained flags can never drift from the one-shot form. The
-    per-batch partials likewise reuse plans/stat_queries.daily_counts:
+    per-batch rows likewise reuse plans/stat_queries.daily_rows:
     both halves of the streamed==batch guarantee live in ONE place."""
     return anomaly_flags(store.read(spark, target))
 

@@ -10,11 +10,13 @@ batch-id guard makes the additive merge exactly-once under crash
 replay (the recipe is in that module's docstring).
 
 State story at 100 TB: the streaming engine holds NO state — partials
-live in the target table at |year×month| rows, each micro-batch costs
-one map-side-combined aggregate of the delta plus a merge over the
-(tiny) partials table, and exactness is the fixed_point_partial/final
-algebra: the maintained table equals the full recompute bit-for-bit
-(pinned in tests/test_streaming_kpi.py).
+live in the target table at |year×month| rows. Each micro-batch costs
+ONE aggregate: the batch's per-order rows (count 1, fixed-point units)
+and the stored partials are summed together, map-side-combined before
+the shuffle, so the batch never pays a separate delta aggregate.
+Exactness is the fixed_point_units/partial/final algebra: the
+maintained table equals the full recompute bit-for-bit (pinned in
+tests/test_streaming_kpi.py).
 """
 
 from __future__ import annotations
@@ -22,25 +24,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import fixed_point_partial
+from ..functions.money import fixed_point_units
 from . import store
 
 
-def kpi_partials(
-    df: DataFrame, ts_col: str = "o_orderdate", amount_col: str = "o_totalprice"
-) -> DataFrame:
-    """Per-(year, month) mergeable partials: exact count + exact
-    fixed-point accumulator (decimal(38,0) — merge headroom far beyond
-    the per-batch decimal(28,0))."""
-    return df.groupBy(
-        F.year(ts_col).alias("year"), F.month(ts_col).alias("month")
-    ).agg(
-        F.count(F.lit(1)).alias("_n"),
-        fixed_point_partial(amount_col).cast("decimal(38,0)").alias("_acc"),
+def _kpi_rows(df: DataFrame, ts_col: str, amount_col: str) -> DataFrame:
+    """Each order as one partial: (year, month, _n=1, _acc=its units)."""
+    return df.select(
+        F.year(ts_col).alias("year"),
+        F.month(ts_col).alias("month"),
+        F.lit(1).alias("_n"),
+        fixed_point_units(amount_col).alias("_acc"),
     )
 
 
 def _merge_partials(df: DataFrame) -> DataFrame:
+    """Per-(year, month) partials: exact count + exact fixed-point
+    accumulator (decimal(38,0) — merge headroom far beyond one value's
+    decimal(28,0))."""
     return df.groupBy("year", "month").agg(
         F.sum("_n").alias("_n"),
         F.sum("_acc").cast("decimal(38,0)").alias("_acc"),
@@ -60,7 +61,7 @@ def apply_kpi_batch(
         batch_df,
         batch_id,
         target,
-        lambda df: kpi_partials(df, ts_col, amount_col),
+        lambda df: _kpi_rows(df, ts_col, amount_col),
         _merge_partials,
     )
 

@@ -4,18 +4,24 @@ through a sink.
 
 Layout of a store at ``<target>``: the JSON pointer ``_CURRENT``
 (``{"version": n, "batch_id": b}``) and immutable parquet version dirs
-``[<relation>/]_v<n>/``. A commit writes its version dirs, then
-publishes the pointer with a tmp file + ``os.replace`` (atomic on a
-POSIX filesystem). A reader resolves the pointer once and scans only
-the versions it names, so it never sees a half-written table. A crash
-before the publish leaves orphan dirs under the next version number,
-which the replayed batch rewrites, so no reaper is needed. Version
-numbers are the store's, never the stream's batch ids.
+``[<relation>/]_v<n>/``, each holding its table's Spark schema as
+``_schema.json``. A commit writes its version dirs (data, then schema),
+then publishes the pointer with a tmp file + ``os.replace`` (atomic on
+a POSIX filesystem). A reader resolves the pointer once and scans only
+the versions it names, so it never sees a half-written table; it takes
+the schema from ``_schema.json``, so building the scan launches no
+schema-inference job (a version dir without the file is inferred). A
+crash before the publish leaves orphan dirs under the next version
+number, which the replayed batch rewrites, so no reaper is needed.
+Version numbers are the store's, never the stream's batch ids.
 
 - Snapshot stores (``read``/``commit``/``fold``; streaming/kpi,
   anomaly, churn, sketch and the events upsert): a version is the
   whole table. ``commit`` keeps the new version and the one before it,
   so a reader's version stays on disk until a second commit lands.
+  ``fold`` merges a batch in ONE aggregate over the batch's rows
+  unioned with the stored table, so a sink whose rows are per-record
+  (kpi, anomaly) pays no separate delta aggregate.
 - Append stores (``scan``/``write_version``/``publish_version``;
   streaming/dedup and novelty): a version is one batch's delta under
   each relation dir, and a reader unions versions 0..n. The sink's
@@ -33,9 +39,9 @@ idempotent and needs no guard.
 
 The ``_`` prefix hides version dirs from Spark's file index, so a
 reader that bypasses this module fails loudly instead of unioning
-versions. One writer per target, local filesystem only; a table format
-such as Delta Lake provides the same log-and-pointer idea with
-transactions.
+versions; it also keeps ``_schema.json`` out of a version's scan.
+One writer per target, local filesystem only; a table format such as
+Delta Lake provides the same log-and-pointer idea with transactions.
 """
 
 from __future__ import annotations
@@ -46,8 +52,10 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 POINTER = "_CURRENT"
+SCHEMA = "_schema.json"
 
 
 def publish(path: str, doc: dict) -> None:
@@ -77,11 +85,26 @@ def _version_dir(target: str, version: int) -> str:
 
 
 def write_version(df: DataFrame, target: str, version: int) -> str:
-    """Write ``df`` as version dir ``version`` under ``target`` (replacing
-    a crashed write's orphan) and return its path. Publishes nothing."""
+    """Write ``df`` and its schema as version dir ``version`` under
+    ``target`` (replacing a crashed write's orphan) and return its path.
+    Publishes nothing."""
     path = _version_dir(target, version)
     df.write.mode("overwrite").parquet(path)
+    with open(os.path.join(path, SCHEMA), "w") as f:
+        f.write(df.schema.json())
     return path
+
+
+def _load(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Scan the version dirs ``paths`` with the schema stored in the
+    last one, or by inference (one Spark job) if it has none. Spark
+    makes every file-read field nullable, so both give one schema."""
+    try:
+        with open(os.path.join(paths[-1], SCHEMA)) as f:
+            schema = StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def read(spark: SparkSession, target: str) -> DataFrame:
@@ -89,7 +112,7 @@ def read(spark: SparkSession, target: str) -> DataFrame:
     ptr = current(target)
     if ptr is None:
         raise FileNotFoundError(f"no committed version under {target}")
-    return spark.read.parquet(_version_dir(target, ptr["version"]))
+    return _load(spark, [_version_dir(target, ptr["version"])])
 
 
 def commit(df: DataFrame, target: str, batch_id: int) -> None:
@@ -107,20 +130,23 @@ def fold(
     batch_df: DataFrame,
     batch_id: int,
     target: str,
-    delta: Callable[[DataFrame], DataFrame],
+    rows: Callable[[DataFrame], DataFrame],
     merge: Callable[[DataFrame], DataFrame],
 ) -> None:
     """Fold one micro-batch into the snapshot store at ``target``: commit
-    ``delta(batch_df)``, or ``merge(read(target) ∪ delta(batch_df))``
-    once the store exists. A batch id at or below the published one is
-    already folded in and is skipped."""
+    ``merge(rows(batch_df) ∪ read(target))``, or ``merge(rows(batch_df))``
+    on the first batch. ``rows`` maps the batch to the store's columns
+    and ``merge`` is the one aggregate, so it must accept both its own
+    output and ``rows``' (a partial of one record, or a batch-local
+    partial). A batch id at or below the published one is already
+    folded in and is skipped."""
     ptr = current(target)
     if ptr is not None and batch_id <= ptr["batch_id"]:
         return  # crash-replayed batch: already folded in
-    new = delta(batch_df)
+    new = rows(batch_df)
     if ptr is not None:
-        new = merge(read(batch_df.sparkSession, target).unionByName(new))
-    commit(new, target, batch_id)
+        new = new.unionByName(read(batch_df.sparkSession, target))
+    commit(merge(new), target, batch_id)
 
 
 def scan(spark: SparkSession, target: str, relation: str = "") -> DataFrame:
@@ -129,9 +155,7 @@ def scan(spark: SparkSession, target: str, relation: str = "") -> DataFrame:
     if ptr is None:
         raise FileNotFoundError(f"no committed version under {target}")
     rel = os.path.join(target, relation)
-    return spark.read.parquet(
-        *(_version_dir(rel, v) for v in range(ptr["version"] + 1))
-    )
+    return _load(spark, [_version_dir(rel, v) for v in range(ptr["version"] + 1)])
 
 
 def publish_version(target: str, mirror: str, version: int, batch_id: int) -> None:

@@ -2,13 +2,18 @@
 boundary, for each of the seven foreachBatch sinks: a crash between the
 version write and the pointer publish, and a reader running while the
 writer commits. The five snapshot sinks share one pair of tests and
-the two append sinks (dedup, novelty) a twin pair."""
+the two append sinks (dedup, novelty) a twin pair. Every sink's version
+dirs carry the schema their readers scan with, and a fold costs a
+fixed number of Spark jobs."""
 
+import json
 import os
 import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from retail_sales_analysis_etl_bi_project_spark.sources.tables import load_table
 from retail_sales_analysis_etl_bi_project_spark.streaming import store
@@ -250,3 +255,130 @@ def test_append_reader_during_commit_sees_whole_committed_states(
     # checked against its own committed states
     outs, rels = ([c[k] for c in committed] for k in (0, 1))
     assert all(o in outs and r in rels for o, r in seen)
+
+
+def _jobs(spark, action):
+    """Spark jobs that ``action()`` launches, counted by a job group."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count test")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("sink", ["kpi", "anomaly"])
+def test_fold_runs_two_jobs_and_read_runs_none(spark, sf_dir, tmp_path, sink):
+    """A fold into an existing store is one aggregate over batch rows ∪
+    store (its shuffle map stage, then the final merge + write), and a
+    store read builds its scan from the stored schema without a job."""
+    apply = SINKS[sink][2]
+    first, second = _batches(spark, sf_dir, sink, 2)
+    target = str(tmp_path / "store")
+    apply(first, 0, target)
+    assert _jobs(spark, lambda: apply(second, 1, target)) == 2
+    assert _jobs(spark, lambda: store.read(spark, target)) == 0
+
+
+def _fill(spark, sf_dir, target, sink, ids):
+    """Fold the batches ``ids`` of a 2-way split of ``sink``'s source
+    into the store at ``target``."""
+    if sink in SINKS:
+        batches = _batches(spark, sf_dir, sink, 2)
+        for bid in ids:
+            SINKS[sink][2](batches[bid], bid, target)
+    else:
+        batches = _doc_batches(spark, sf_dir, 2)
+        for bid in ids:
+            APPEND_SINKS[sink][0](batches[bid], bid, target, _out(target))
+
+
+def _stores(target, sink):
+    """(scan of the published table, its version dirs) for every store
+    the sink keeps: the snapshot store, or each relation of an append
+    store and its output dir."""
+    if sink in SINKS:
+        version = store.current(target)["version"]
+        return [(lambda s: store.read(s, target), [f"{target}/_v{version}"])]
+    roots = [(target, r) for r in sorted(os.listdir(target)) if r != store.POINTER]
+    roots.append((_out(target), ""))
+    return [
+        (
+            lambda s, root=root, rel=rel: store.scan(s, root, rel),
+            [
+                os.path.join(root, rel, f"_v{v}")
+                for v in range(store.current(root)["version"] + 1)
+            ],
+        )
+        for root, rel in roots
+    ]
+
+
+def _sink_state(spark, sink, target):
+    if sink in SINKS:
+        return _state(spark, sink, target)
+    return _rows(APPEND_SINKS[sink][1](spark, _out(target)))
+
+
+def _schema_files(top):
+    return [
+        os.path.join(d, store.SCHEMA)
+        for d, _, files in os.walk(top)
+        if store.SCHEMA in files
+    ]
+
+
+@pytest.mark.parametrize("sink", [*SINKS, *APPEND_SINKS])
+def test_version_schema_file_matches_inference_and_is_optional(
+    spark, sf_dir, tmp_path, sink
+):
+    target = str(tmp_path / "store")
+    _fill(spark, sf_dir, target, sink, [0, 1])
+    for scan, dirs in _stores(target, sink):
+        assert all(os.path.isfile(os.path.join(d, store.SCHEMA)) for d in dirs)
+        assert scan(spark).schema == spark.read.parquet(*dirs).schema
+    want = _sink_state(spark, sink, target)
+
+    # a version dir written before schema files existed is inferred
+    files = _schema_files(str(tmp_path))
+    assert files
+    for f in files:
+        os.remove(f)
+    assert _sink_state(spark, sink, target) == want
+    for scan, dirs in _stores(target, sink):
+        assert scan(spark).schema == spark.read.parquet(*dirs).schema
+
+
+@pytest.mark.parametrize("sink", [*SINKS, *APPEND_SINKS])
+def test_crash_replayed_version_rewrites_its_schema_file(
+    spark, sf_dir, tmp_path, monkeypatch, sink
+):
+    target = str(tmp_path / "store")
+    _fill(spark, sf_dir, target, sink, [0])
+
+    def crash(path, doc):
+        raise RuntimeError("killed before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "publish", crash)
+        with pytest.raises(RuntimeError, match="before publish"):
+            _fill(spark, sf_dir, target, sink, [1])
+    orphans = [f for f in _schema_files(str(tmp_path)) if "_v1" in f]
+    assert orphans
+    bogus = StructType([StructField("bogus", StringType())]).json()
+    for f in orphans:
+        with open(f, "w") as fh:
+            fh.write(bogus)
+
+    _fill(spark, sf_dir, target, sink, [1])  # the restarted stream's replay
+    for f in orphans:
+        vdir = os.path.dirname(f)
+        with open(f) as fh:
+            stored = StructType.fromJson(json.load(fh))
+        inferred = spark.read.parquet(vdir).schema
+        assert spark.read.schema(stored).parquet(vdir).schema == inferred
+    for scan, dirs in _stores(target, sink):
+        assert scan(spark).schema == spark.read.parquet(*dirs).schema
