@@ -69,7 +69,8 @@ def apply_dedup_batch(
         return  # a fully re-delivered batch: nothing to pair or append
     # compute the batch's relations ONCE: write them, then read back for
     # candidate generation (the lazy plans would otherwise re-run the
-    # 64-hash pipeline for every downstream action)
+    # 64-hash pipeline for every downstream action), with the schema
+    # each version stores, so the read-back infers nothing
     nb, ns = signature_store_relations(
         batch, num_hashes=num_hashes, bands=bands, n=n,
         text_col=text_col, id_col=id_col,
@@ -78,8 +79,8 @@ def apply_dedup_batch(
     nb_path = store.write_version(nb, os.path.join(store_dir, "bands"), version)
     ns_path = store.write_version(ns, os.path.join(store_dir, "shingles"), version)
     pairs = pairs_from_relations(
-        spark.read.parquet(nb_path),
-        spark.read.parquet(ns_path),
+        store.load(spark, [nb_path]),
+        store.load(spark, [ns_path]),
         old_b,
         old_s,
         threshold=threshold,

@@ -42,6 +42,8 @@ reader that bypasses this module fails loudly instead of unioning
 versions; it also keeps ``_schema.json`` out of a version's scan.
 One writer per target, local filesystem only; a table format such as
 Delta Lake provides the same log-and-pointer idea with transactions.
+The stream's own checkpoint (offsets, commits) is Spark's, written
+through Hadoop's FileSystem API by the manager session.py sets.
 """
 
 from __future__ import annotations
@@ -95,7 +97,7 @@ def write_version(df: DataFrame, target: str, version: int) -> str:
     return path
 
 
-def _load(spark: SparkSession, paths: list[str]) -> DataFrame:
+def load(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Scan the version dirs ``paths`` with the schema stored in the
     last one, or by inference (one Spark job) if it has none. Spark
     makes every file-read field nullable, so both give one schema."""
@@ -112,7 +114,7 @@ def read(spark: SparkSession, target: str) -> DataFrame:
     ptr = current(target)
     if ptr is None:
         raise FileNotFoundError(f"no committed version under {target}")
-    return _load(spark, [_version_dir(target, ptr["version"])])
+    return load(spark, [_version_dir(target, ptr["version"])])
 
 
 def commit(df: DataFrame, target: str, batch_id: int) -> None:
@@ -155,7 +157,7 @@ def scan(spark: SparkSession, target: str, relation: str = "") -> DataFrame:
     if ptr is None:
         raise FileNotFoundError(f"no committed version under {target}")
     rel = os.path.join(target, relation)
-    return _load(spark, [_version_dir(rel, v) for v in range(ptr["version"] + 1)])
+    return load(spark, [_version_dir(rel, v) for v in range(ptr["version"] + 1)])
 
 
 def publish_version(target: str, mirror: str, version: int, batch_id: int) -> None:

@@ -5,9 +5,17 @@ the dashboard's working set, so a warm dashboard pass serves every
 whole-stage class from the cache instead of recompiling it with Janino.
 Spark's default of 100 entries is smaller than the twelve queries'
 ~190 classes, so at the default a second pass recompiles most of them.
+
+Streaming checkpoints go through Hadoop's FileSystem API
+(``session.CHECKPOINT_FILE_MANAGERS``): the manager Spark builds for a
+checkpoint dir must be the FileSystem-based one, not its default
+FileContext one, which forks shell commands on every write.
 """
 
+from functools import reduce
+
 import __spark_entry__ as entrymod
+from py4j.java_gateway import JavaClass
 
 # The dashboard deck: the reference's insight queries and KPIs served
 # from the star schema.
@@ -49,3 +57,28 @@ def test_warm_dashboard_pass_compiles_nothing(spark, sf_dir):
     _pass(spark, qs, sf_dir)
     recompiled = {q: n for q, n in _pass(spark, qs, sf_dir).items() if n}
     assert not recompiled, f"warm pass recompiled classes: {recompiled}"
+
+
+# where Spark keeps its checkpoint managers: 4.1 moved them into
+# ``checkpointing``
+STREAMING_PACKAGES = (
+    "org.apache.spark.sql.execution.streaming.checkpointing",
+    "org.apache.spark.sql.execution.streaming",
+)
+
+
+def _jvm_class(spark, name):
+    """The JVM class ``name``, or None if the running JVM cannot load it."""
+    found = reduce(getattr, name.split("."), spark._jvm)
+    return found if isinstance(found, JavaClass) else None
+
+
+def test_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    classes = [_jvm_class(spark, f"{p}.CheckpointFileManager") for p in STREAMING_PACKAGES]
+    factory = next(c for c in classes if c is not None)
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = factory.create(spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf)
+    name = manager.getClass().getName()
+    assert name.endswith(".FileSystemBasedCheckpointFileManager"), name
+    # the configured name is the one the JVM loaded
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == name

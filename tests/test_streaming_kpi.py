@@ -1,11 +1,16 @@
 """Streaming incremental KPI maintenance (streaming/kpi.py): the
 maintained partials table must equal the batch full recompute
-bit-for-bit after draining the stream, survive a restart as a no-op,
+bit-for-bit after draining the stream, survive a restart as a no-op
+(also when the checkpoint was begun by another checkpoint manager),
 and refuse to double-count a crash-replayed batch id."""
+
+import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from retail_sales_analysis_etl_bi_project_spark.sources.tables import load_table
+from retail_sales_analysis_etl_bi_project_spark.streaming import store
 from retail_sales_analysis_etl_bi_project_spark.streaming.harness import (
     chunked_file_source,
 )
@@ -70,6 +75,42 @@ def test_maintained_kpi_equals_full_recompute_and_restart_noop(spark, tmp_path):
     stream2 = spark.readStream.schema(orders.schema).parquet(src)
     maintain_kpi_stream(stream2, target, ckpt)
     assert sorted(map(tuple, read_kpi(spark, target).collect())) == got
+
+
+def test_checkpoint_begun_by_spark_default_manager_resumes(spark, tmp_path):
+    """Half the source drained with Spark's default FileContext
+    checkpoint manager (the layout of checkpoints written before the
+    engine set its own), the rest with the engine's FileSystem manager
+    on the same checkpoint and target: the table equals the full
+    recompute."""
+    orders = load_table(spark, SF_DIR, "orders")
+    staged, src = str(tmp_path / "staged"), str(tmp_path / "orders_src")
+    chunked_file_source(orders, "o_orderkey", staged, 4)
+    files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    assert len(files) == 4
+    os.makedirs(src)
+    target, ckpt = str(tmp_path / "kpi"), str(tmp_path / "ckpt")
+
+    def drain(names):
+        for name in names:
+            shutil.move(os.path.join(staged, name), src)
+        stream = spark.readStream.schema(orders.schema).option(
+            "maxFilesPerTrigger", 1
+        ).parquet(src)
+        maintain_kpi_stream(stream, target, ckpt)
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    engine = spark.conf.get(key)
+    spark.conf.set(key, engine.replace("FileSystemBased", "FileContextBased"))
+    try:
+        drain(files[:2])
+    finally:
+        spark.conf.set(key, engine)
+    assert store.current(target)["batch_id"] == 1
+    drain(files[2:])
+    assert store.current(target)["batch_id"] == 3  # resumed, not restarted
+    got = sorted(map(tuple, read_kpi(spark, target).collect()))
+    assert got == _expected(orders)
 
 
 def test_replayed_batch_id_is_not_double_counted(spark, tmp_path):

@@ -283,6 +283,27 @@ def test_fold_runs_two_jobs_and_read_runs_none(spark, sf_dir, tmp_path, sink):
     assert _jobs(spark, lambda: store.read(spark, target)) == 0
 
 
+def test_dedup_batch_reads_its_new_versions_without_inference(
+    spark, sf_dir, tmp_path
+):
+    """A dedup batch scans the bands/ and shingles/ versions it has just
+    written with their stored schemas: 15 jobs at 8 shuffle partitions,
+    two fewer than when each read-back inferred its schema. The count
+    depends on the partition count, which any later ``get_spark`` call
+    in the session resets, so the test sets it."""
+    first, second = _doc_batches(spark, sf_dir, 2)
+    target = str(tmp_path / "store")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        apply_dedup_batch(first, 0, target, _out(target))
+        jobs = _jobs(spark, lambda: apply_dedup_batch(second, 1, target, _out(target)))
+    finally:
+        spark.conf.set(key, prev)
+    assert jobs == 15
+
+
 def _fill(spark, sf_dir, target, sink, ids):
     """Fold the batches ``ids`` of a 2-way split of ``sink``'s source
     into the store at ``target``."""
