@@ -80,7 +80,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine.
+    """Build a SparkSession tuned for this engine, or return the running
+    one without re-applying these confs to it (only the checkpoint
+    manager is set on every call).
 
     On a real cluster, ``master`` comes from the environment; locally we
     default to ``local[$SPARK_GRAFT_CPUS]``.
@@ -122,7 +124,13 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    running = SparkSession._instantiatedSession
+    if running is not None and running._sc._jsc is not None:
+        # getOrCreate would set the builder's runtime SQL confs on the
+        # running session, under every caller that already uses it
+        spark = running
+    else:
+        spark = builder.getOrCreate()
     ensure_nanos_as_long(spark)
     manager = _checkpoint_file_manager(spark)
     if manager is not None and CHECKPOINT_FILE_MANAGER_CONF not in (extra_conf or {}):

@@ -7,6 +7,9 @@ from retail_sales_analysis_etl_bi_project_spark.run_etl import main
 def test_run_etl_generated(spark, tmp_path):
     out = tmp_path / "wh"
     main(["--out", str(out), "--rows", "500"])
+    # get_spark returned the running session as it is: the ETL's own
+    # shuffle-partition count did not replace the test session's 8
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert (out / "validation_report.txt").exists()
     report = (out / "validation_report.txt").read_text()
     assert "rows in customers:" in report

@@ -19,6 +19,11 @@ registered query, record
                 compiles once while the cache holds it): the figure
                 ``session.CODEGEN_CACHE_ENTRIES`` is sized against.
                 Re-check it when queries are added or removed.
+  - memoized  : whether the registry keeps the query's built plan
+                (plans/registry.py): a second registry call, made
+                after the timed action, is a hit in the plan family's
+                counter (shared_cache.counts). The count of memoized
+                queries is printed last.
 
 One pass per query (cold within the session, after a few warm-ups),
 with between-queries hygiene so one query's persists don't subsidize
@@ -136,6 +141,9 @@ def main() -> None:
             row["codegen_compiles"] = (
                 codegen.METRIC_COMPILATION_TIME().getCount() - compiles
             )
+            hits = shared_cache.counts().get(f"plan:{name}", (0, 0))[0]
+            qs[name](spark, sf_dir)
+            row["memoized"] = shared_cache.counts()[f"plan:{name}"][0] > hits
         except Exception as e:  # noqa: BLE001 — partial table > no table
             row["error"] = f"{type(e).__name__}: {e}"[:200]
         table[name] = row
@@ -154,6 +162,8 @@ def main() -> None:
     print(json.dumps({"codegen_compiles": sum(
         r.get("codegen_compiles", 0) for r in table.values()
     )}))
+    print(json.dumps({"memoized": sum(bool(r.get("memoized")) for r in table.values()),
+                      "queries": len(table)}))
 
 
 if __name__ == "__main__":
