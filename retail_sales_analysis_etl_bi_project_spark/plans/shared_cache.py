@@ -11,7 +11,10 @@ queries goes through it:
 
 - one slot per cache FAMILY (dedup verified pairs and clusters, tf
   table, distinct-names table, ...),
-  keyed by (applicationId, sf_dir, params);
+  keyed by (applicationId, sf_dir, params) plus the content signature
+  of the files under sf_dir (``sources.tables._path_sig``), so a
+  build over rewritten inputs never reuses an intermediate persisted
+  over the old files;
 - a key MISS first unpersists and drops every previous entry of that
   family (explicit unpersist: the cache holds at most one persisted
   plan per family, so repeated bench/test invocations can't accumulate
@@ -39,6 +42,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from ..sources.tables import _path_sig
+
 _CACHES: dict[str, dict[tuple, DataFrame]] = {}
 _COUNTS: dict[str, list[int]] = {}  # family -> [hits, misses]
 _COUNT_LOCK = threading.Lock()
@@ -64,7 +69,13 @@ def memo_persist(
 ) -> DataFrame:
     """Return the persisted DataFrame for (family, key), building it on
     first use; a new key evicts (and unpersists) the family's previous
-    entry."""
+    entry. ``key`` is (applicationId, sf_dir, params...), and the
+    signature of the files under sf_dir is added to it (an sf_dir that
+    ``os`` cannot list is keyed as given)."""
+    try:
+        key = key + (_path_sig(key[1]),)
+    except OSError:
+        pass
     cache = _CACHES.setdefault(family, {})
     df = cache.get(key)
     _tally(family, df is not None)

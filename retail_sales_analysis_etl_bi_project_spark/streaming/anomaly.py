@@ -14,7 +14,11 @@ State story at 100 TB: the engine holds no state — the store is
 |event_type x day| rows (tiny at any scale). Each micro-batch costs ONE
 map-side-combined sum over the batch's per-event rows (daily_rows)
 together with the stored counts, and the readout's per-type moments
-are a groupBy over the day-grain store, never the raw stream.
+are a groupBy over the day-grain store, never the raw stream. The
+fold collects the merged store whole to the driver each batch and
+writes it as the next version: bounded by
+``spark.driver.maxResultSize``, above which the batch fails loudly
+before anything is written and replays safely.
 """
 
 from __future__ import annotations

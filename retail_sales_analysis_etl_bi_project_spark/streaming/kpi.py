@@ -14,9 +14,12 @@ live in the target table at |year×month| rows. Each micro-batch costs
 ONE aggregate: the batch's per-order rows (count 1, fixed-point units)
 and the stored partials are summed together, map-side-combined before
 the shuffle, so the batch never pays a separate delta aggregate.
-Exactness is the fixed_point_units/partial/final algebra: the
-maintained table equals the full recompute bit-for-bit (pinned in
-tests/test_streaming_kpi.py).
+The fold collects the merged partials whole to the driver each batch
+and writes them as the store's next version: bounded by
+``spark.driver.maxResultSize``, above which the batch fails loudly
+before anything is written and replays safely. Exactness is the
+fixed_point_units/partial/final algebra: the maintained table equals
+the full recompute bit-for-bit (pinned in tests/test_streaming_kpi.py).
 """
 
 from __future__ import annotations

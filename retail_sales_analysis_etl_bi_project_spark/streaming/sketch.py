@@ -19,7 +19,11 @@ replay.
 State story at 100 TB: the stored table is ≤ CMS_D × CMS_W rows (4096)
 FOREVER — the whole point of sketch maintenance; each micro-batch costs
 one tokenize + term-grain combine of the DELTA plus a merge over the
-4096-row grid. The streaming engine itself holds no state.
+4096-row grid. The streaming engine itself holds no state. The fold
+collects the merged grid whole to the driver each batch and writes it
+as the next version; a store above ``spark.driver.maxResultSize``
+would fail the batch loudly before anything is written, and the
+replay is safe.
 """
 
 from __future__ import annotations

@@ -7,21 +7,32 @@ Layout of a store at ``<target>``: the JSON pointer ``_CURRENT``
 ``[<relation>/]_v<n>/``, each holding its table's Spark schema as
 ``_schema.json``. A commit writes its version dirs (data, then schema),
 then publishes the pointer with a tmp file + ``os.replace`` (atomic on
-a POSIX filesystem). A reader resolves the pointer once and scans only
-the versions it names, so it never sees a half-written table; it takes
-the schema from ``_schema.json``, so building the scan launches no
-schema-inference job (a version dir without the file is inferred). A
-crash before the publish leaves orphan dirs under the next version
-number, which the replayed batch rewrites, so no reaper is needed.
+a POSIX filesystem). A fold's version is one parquet file that the
+driver writes from the collected merge with page checksums, which every
+store scan verifies; the other versions are Spark parquet writes. A
+reader resolves the pointer once and scans only the versions it names,
+so it never sees a half-written table; it takes the schema from
+``_schema.json``, so building the scan launches no schema-inference
+job (a version dir without the file is inferred). A crash before the
+publish leaves orphan dirs under the next version number, which the
+replayed batch rewrites, so no reaper is needed.
 Version numbers are the store's, never the stream's batch ids.
 
 - Snapshot stores (``read``/``commit``/``fold``; streaming/kpi,
   anomaly, churn, sketch and the events upsert): a version is the
-  whole table. ``commit`` keeps the new version and the one before it,
+  whole table. A publish keeps the new version and the one before it,
   so a reader's version stays on disk until a second commit lands.
   ``fold`` merges a batch in ONE aggregate over the batch's rows
   unioned with the stored table, so a sink whose rows are per-record
-  (kpi, anomaly) pays no separate delta aggregate.
+  (kpi, anomaly) pays no separate delta aggregate. A fold store is an
+  aggregate bounded by its key domain, so ``fold`` collects the merge
+  whole to the driver (``toArrow``, the same two jobs a Spark write
+  runs) and writes it as one file: no Hadoop output committer, whose
+  temporary dirs, ``_SUCCESS`` marker and ``.crc`` files fork a
+  ``chmod`` each on a Hadoop build without native IO. A merge above
+  ``spark.driver.maxResultSize`` fails the batch before anything is
+  written, and the replay is safe. The events upsert grows with event
+  volume, so ``commit`` writes it through Spark.
 - Append stores (``scan``/``write_version``/``publish_version``;
   streaming/dedup and novelty): a version is one batch's delta under
   each relation dir, and a reader unions versions 0..n. The sink's
@@ -53,11 +64,13 @@ import os
 import shutil
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 POINTER = "_CURRENT"
 SCHEMA = "_schema.json"
+FOLD_FILE = "part-0.parquet"  # the one data file of a fold's version
 
 
 def publish(path: str, doc: dict) -> None:
@@ -92,21 +105,27 @@ def write_version(df: DataFrame, target: str, version: int) -> str:
     Publishes nothing."""
     path = _version_dir(target, version)
     df.write.mode("overwrite").parquet(path)
-    with open(os.path.join(path, SCHEMA), "w") as f:
-        f.write(df.schema.json())
+    _write_schema(path, df.schema)
     return path
+
+
+def _write_schema(path: str, schema: StructType) -> None:
+    with open(os.path.join(path, SCHEMA), "w") as f:
+        f.write(schema.json())
 
 
 def load(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Scan the version dirs ``paths`` with the schema stored in the
-    last one, or by inference (one Spark job) if it has none. Spark
-    makes every file-read field nullable, so both give one schema."""
+    last one, or by inference (one Spark job) if it has none, verifying
+    every page checksum the files carry. Spark makes every file-read
+    field nullable, so both give one schema."""
+    reader = spark.read.option("parquet.page.verify-checksum.enabled", "true")
     try:
         with open(os.path.join(paths[-1], SCHEMA)) as f:
             schema = StructType.fromJson(json.load(f))
     except FileNotFoundError:
-        return spark.read.parquet(*paths)
-    return spark.read.schema(schema).parquet(*paths)
+        return reader.parquet(*paths)
+    return reader.schema(schema).parquet(*paths)
 
 
 def read(spark: SparkSession, target: str) -> DataFrame:
@@ -117,15 +136,21 @@ def read(spark: SparkSession, target: str) -> DataFrame:
     return load(spark, [_version_dir(target, ptr["version"])])
 
 
-def commit(df: DataFrame, target: str, batch_id: int) -> None:
-    """Write ``df`` as the next version and publish it."""
-    version = next_version(current(target))
-    write_version(df, target, version)
+def _publish_snapshot(target: str, version: int, batch_id: int) -> None:
+    """Publish the written ``version`` of a snapshot store, then delete
+    every version dir but it and the one before it."""
     publish(os.path.join(target, POINTER), {"version": version, "batch_id": batch_id})
     keep = {f"_v{version}", f"_v{version - 1}"}
     for name in os.listdir(target):
         if name.startswith("_v") and name not in keep:
             shutil.rmtree(os.path.join(target, name), ignore_errors=True)
+
+
+def commit(df: DataFrame, target: str, batch_id: int) -> None:
+    """Write ``df`` as the next version through Spark and publish it."""
+    version = next_version(current(target))
+    write_version(df, target, version)
+    _publish_snapshot(target, version, batch_id)
 
 
 def fold(
@@ -141,14 +166,23 @@ def fold(
     and ``merge`` is the one aggregate, so it must accept both its own
     output and ``rows``' (a partial of one record, or a batch-local
     partial). A batch id at or below the published one is already
-    folded in and is skipped."""
+    folded in and is skipped. The merged table is collected to the
+    driver and written as the version's one file (module docstring)."""
     ptr = current(target)
     if ptr is not None and batch_id <= ptr["batch_id"]:
         return  # crash-replayed batch: already folded in
     new = rows(batch_df)
     if ptr is not None:
         new = new.unionByName(read(batch_df.sparkSession, target))
-    commit(merge(new), target, batch_id)
+    merged = merge(new)
+    table = merged.toArrow()
+    version = next_version(ptr)
+    path = _version_dir(target, version)
+    shutil.rmtree(path, ignore_errors=True)  # a crashed write's orphan
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, FOLD_FILE), write_page_checksum=True)
+    _write_schema(path, merged.schema)
+    _publish_snapshot(target, version, batch_id)
 
 
 def scan(spark: SparkSession, target: str, relation: str = "") -> DataFrame:

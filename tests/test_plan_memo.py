@@ -299,3 +299,22 @@ def test_plan_over_a_persist_misses_once_the_persist_is_gone(spark, sf_dir, qs):
     assert _counts(name) == (hits + 1, misses + 1)
     assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
     shared_cache.release()
+
+
+def test_a_persist_over_rewritten_inputs_is_rebuilt(spark, sf_dir, qs, tmp_path):
+    """A managed persist is keyed by the files under ``sf_dir`` too, so
+    the build that follows an in-place rewrite persists the new files'
+    intermediate instead of reusing the one over the old files."""
+    name = "text_tfidf_topterms"  # builds over the term_tf persist
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    root = str(tmp_path / "sf")
+    _write(docs, f"{root}/documents.parquet", slice(0, docs.num_rows))
+    shared_cache.release()
+    before = _rows(qs[name](spark, root))
+    # rewritten in place with half its rows
+    _write(docs, f"{root}/documents.parquet", slice(0, docs.num_rows // 2))
+    after = _rows(qs[name](spark, root))
+    shared_cache.release()
+    assert after == _rows(qs[name].__wrapped__(spark, root))
+    assert after != before
+    shared_cache.release()

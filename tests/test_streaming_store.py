@@ -4,13 +4,15 @@ version write and the pointer publish, and a reader running while the
 writer commits. The five snapshot sinks share one pair of tests and
 the two append sinks (dedup, novelty) a twin pair. Every sink's version
 dirs carry the schema their readers scan with, and a fold costs a
-fixed number of Spark jobs."""
+fixed number of Spark jobs. A fold's version is one driver-written
+file, and a corrupted store file fails every sink's readout."""
 
 import json
 import os
 import threading
 import uuid
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -403,3 +405,57 @@ def test_crash_replayed_version_rewrites_its_schema_file(
         assert spark.read.schema(stored).parquet(vdir).schema == inferred
     for scan, dirs in _stores(target, sink):
         assert scan(spark).schema == spark.read.parquet(*dirs).schema
+
+
+@pytest.mark.parametrize("sink", ["kpi", "anomaly", "churn", "sketch"])
+def test_fold_version_is_one_file_and_its_schema(spark, sf_dir, tmp_path, sink):
+    """A fold writes its version from the driver: one parquet file and
+    the schema, none of a Hadoop output committer's files."""
+    target = str(tmp_path / "store")
+    _fill(spark, sf_dir, target, sink, [0, 1])
+    versions = sorted(e for e in os.listdir(target) if e.startswith("_v"))
+    assert versions == ["_v0", "_v1"]
+    for v in versions:
+        names = os.listdir(os.path.join(target, v))
+        data = [n for n in names if n.endswith(".parquet")]
+        assert len(data) == 1 and sorted(names) == sorted([*data, store.SCHEMA]), names
+
+
+def _flip_page_bytes(path):
+    """Flip the last byte of every column chunk of the parquet file at
+    ``path`` (inside its last data page, located by the chunk's
+    metadata); returns how many chunks were hit."""
+    meta = pq.ParquetFile(path).metadata
+    ends = []
+    for g in range(meta.num_row_groups):
+        for c in range(meta.num_columns):
+            chunk = meta.row_group(g).column(c)
+            start = chunk.data_page_offset
+            if chunk.has_dictionary_page and chunk.dictionary_page_offset:
+                start = min(start, chunk.dictionary_page_offset)
+            ends.append(start + chunk.total_compressed_size)
+    with open(path, "r+b") as f:
+        for end in ends:
+            f.seek(end - 1)
+            byte = f.read(1)[0]
+            f.seek(end - 1)
+            f.write(bytes([byte ^ 0xFF]))
+    return len(ends)
+
+
+@pytest.mark.parametrize("sink", [*SINKS, *APPEND_SINKS])
+def test_corrupted_store_file_fails_the_readout(spark, sf_dir, tmp_path, sink):
+    """Spark-written files carry ``.crc`` files, a fold's file page
+    checksums that every store scan verifies: a flipped byte in a data
+    page fails the readout instead of reading wrong values."""
+    target = str(tmp_path / "store")
+    _fill(spark, sf_dir, target, sink, [0, 1])
+    hit = 0
+    for _, dirs in _stores(target, sink):
+        for d in dirs:
+            for name in os.listdir(d):
+                if name.endswith(".parquet"):
+                    hit += _flip_page_bytes(os.path.join(d, name))
+    assert hit
+    with pytest.raises(Exception, match="(?i)checksum"):
+        _sink_state(spark, sink, target)
