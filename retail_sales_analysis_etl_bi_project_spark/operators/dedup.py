@@ -300,31 +300,6 @@ def minhash_params(num_hashes: int, seed: int = HASH_SEED) -> list[tuple[int, in
     ]
 
 
-def minhash_signature_expr(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as a single expression: per hash function i, min
-    over shingles of (a_i * hash60(shingle) + b_i) mod P31.
-
-    NOTE: expression form only — every one of the num_hashes array_min
-    terms re-evaluates the ``shingles`` subtree, so on real data use
-    minhash_signatures() (explode + grouped partial mins), which computes
-    shingles once. Kept for tiny inputs and as the semantic spec.
-
-    Closures are built via a factory — a `lambda s, i=i:` default arg
-    changes the lambda's arity and PySpark binds the extra parameter to
-    the array-index lambda variable instead of the captured value."""
-
-    def seeded(a: int, b: int):
-        return lambda s: (
-            F.lit(a).cast("bigint") * (hash60_expr(s) % P31) + F.lit(b)
-        ) % P31
-
-    sigs = [
-        F.array_min(F.transform(shingles, seeded(a, b)))
-        for a, b in minhash_params(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_signatures(
     docs: DataFrame,
     num_hashes: int = 64,

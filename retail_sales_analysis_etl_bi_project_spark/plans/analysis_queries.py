@@ -434,9 +434,7 @@ def dedup_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
 
-    names = memo_persist(
-        "fuzzy_names", (spark.sparkContext.applicationId, sf_dir), build_names
-    )
+    names = memo_persist("fuzzy_names", spark, sf_dir, build_names)
     delkeys = F.transform(
         F.sequence(F.lit(0), F.length("name")),
         lambda i: F.when(i == 0, F.col("name")).otherwise(
@@ -573,9 +571,7 @@ def _shared_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         )
 
-    return memo_persist(
-        "term_tf", (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo_persist("term_tf", spark, sf_dir, build)
 
 
 @query(
@@ -1055,13 +1051,15 @@ def _shared_bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
 
     return memo_artifact(
         "bpe_merges",
-        (spark.sparkContext.applicationId, sf_dir, _BPE_ROUNDS),
+        spark,
+        sf_dir,
         lambda: [
             tuple(r)
             for r in bpe_train_merges(
                 load_table(spark, sf_dir, "documents"), rounds=_BPE_ROUNDS
             ).collect()
         ],
+        params=(_BPE_ROUNDS,),
     )
 
 
@@ -1310,7 +1308,8 @@ def corpus_source_tv_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full corpus tokenize; warm exec 1.54 -> see OPTIMIZATION_r16.md.
     st = memo_persist(
         "tv_drift_source_term_counts",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: (
             lower_terms(docs, "source")
             .groupBy("source", "term")

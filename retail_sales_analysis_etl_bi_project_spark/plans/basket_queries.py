@@ -54,7 +54,8 @@ def shared_basket_li(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return memo_persist(
         "basket_li",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: to_cluster_width(
             load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_partkey")
@@ -76,7 +77,8 @@ def shared_item_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = shared_basket_li(spark, sf_dir)
     return memo_persist(
         "basket_item_support",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: li.groupBy("l_partkey").agg(
             F.count(F.lit(1)).alias("n_item")
         ),
@@ -98,7 +100,8 @@ def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select("l_orderkey", F.col("l_partkey").alias("part_b"))
     return memo_persist(
         "copurchase_pairs",
-        (spark.sparkContext.applicationId, sf_dir, _MIN_SUPPORT),
+        spark,
+        sf_dir,
         lambda: (
             a.join(b, "l_orderkey")
             .where(F.col("part_a") < F.col("part_b"))
@@ -106,6 +109,7 @@ def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_both"))
             .where(F.col("n_both") >= _MIN_SUPPORT)
         ),
+        params=(_MIN_SUPPORT,),
     )
 
 

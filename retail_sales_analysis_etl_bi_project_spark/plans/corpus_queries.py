@@ -80,9 +80,7 @@ def shared_scored_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             fingerprint_expr("text").alias("fp"),
         )
 
-    return memo_persist(
-        "curation_scored", (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo_persist("curation_scored", spark, sf_dir, build)
 
 
 def shared_contaminated_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,9 +98,7 @@ def shared_contaminated_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         is_bench = F.col("doc_id") % _BENCH_MOD == 0
         return contaminated_ids(docs.filter(~is_bench), docs.filter(is_bench), n=8)
 
-    return memo_persist(
-        "curation_dirty", (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo_persist("curation_dirty", spark, sf_dir, build)
 
 
 @query(

@@ -381,7 +381,8 @@ def shared_jaccard_truth(
 
     return memo_persist(
         "jaccard_truth",
-        (spark.sparkContext.applicationId, sf_dir, threshold, n, _TRUTH_SAMPLE_K),
+        spark,
+        sf_dir,
         lambda: allpairs_jaccard_join(
             _truth_docs(spark, sf_dir),
             threshold=threshold,
@@ -391,6 +392,7 @@ def shared_jaccard_truth(
             # so injecting the managed persist saves two tokenize scans
             shingles=_truth_shingles(spark, sf_dir, n),
         ),
+        params=(threshold, n, _TRUTH_SAMPLE_K),
     )
 
 
@@ -409,7 +411,8 @@ def shared_minhash_signatures(
 
     return memo_persist(
         "minhash_sigs",
-        (spark.sparkContext.applicationId, sf_dir, num_hashes, _TRUTH_SAMPLE_K),
+        spark,
+        sf_dir,
         # derive from the persisted shingle table (signature-store
         # discipline, r11): one tokenize pass serves shingles AND
         # signatures; identical output pinned in tests/test_dedup.py
@@ -418,6 +421,7 @@ def shared_minhash_signatures(
             num_hashes,
             shingles=_truth_shingles(spark, sf_dir),
         ),
+        params=(num_hashes, _TRUTH_SAMPLE_K),
     )
 
 
@@ -457,7 +461,8 @@ def shared_minhash_pairs(
     # not leak in here — a full-corpus twin family is used instead.
     return memo_persist(
         "minhash_pairs",
-        (spark.sparkContext.applicationId, sf_dir, threshold, num_hashes, bands),
+        spark,
+        sf_dir,
         lambda: minhash_dedup_pairs(
             load_table(spark, sf_dir, "documents"),
             threshold=threshold,
@@ -466,6 +471,7 @@ def shared_minhash_pairs(
             signatures=_full_corpus_signatures(spark, sf_dir, num_hashes),
             shingles=_shared_shingles(spark, sf_dir),
         ),
+        params=(threshold, num_hashes, bands),
     )
 
 
@@ -487,12 +493,14 @@ def _full_corpus_signatures(
 
     return memo_persist(
         "minhash_sigs_full",
-        (spark.sparkContext.applicationId, sf_dir, num_hashes),
+        spark,
+        sf_dir,
         lambda: minhash_signatures(
             load_table(spark, sf_dir, "documents"),
             num_hashes,
             shingles=_shared_shingles(spark, sf_dir),
         ),
+        params=(num_hashes,),
     )
 
 
@@ -555,7 +563,8 @@ def shared_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per round — the driver tolerates eager builds for this query.
     return memo_persist(
         "dedup_cc",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: connected_components(
             shared_minhash_pairs(spark, sf_dir),
             src="doc_a",
@@ -812,8 +821,10 @@ def _shared_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
 
     return memo_persist(
         "shingles",
-        (spark.sparkContext.applicationId, sf_dir, n),
+        spark,
+        sf_dir,
         lambda: shingle_relation(load_table(spark, sf_dir, "documents"), n),
+        params=(n,),
     )
 
 
@@ -832,8 +843,10 @@ def _truth_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
 
     return memo_persist(
         "shingles_sampled",
-        (spark.sparkContext.applicationId, sf_dir, n, _TRUTH_SAMPLE_K),
+        spark,
+        sf_dir,
         lambda: shingle_relation(_truth_docs(spark, sf_dir), n),
+        params=(n, _TRUTH_SAMPLE_K),
     )
 
 
@@ -1373,7 +1386,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = memo_persist(
         "semantic_assign16",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: ivf_assignments(emb, 16)[0],
     )
     return semantic_dedup_flags(emb, threshold=0.4, assigned=assigned)
@@ -1477,10 +1491,12 @@ def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     truth = memo_persist(
         "semantic_truth",
-        (spark.sparkContext.applicationId, sf_dir, _TRUTH_SAMPLE_K),
+        spark,
+        sf_dir,
         lambda: embedding_near_dup_pairs(emb, threshold=0.4).select(
             "vec_a", "vec_b"
         ),
+        params=(_TRUTH_SAMPLE_K,),
     ).withColumn("_in_truth", F.lit(True))
 
     def rung(n_centroids: int, n_assign: int = 1) -> DataFrame:

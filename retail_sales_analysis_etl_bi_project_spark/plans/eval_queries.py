@@ -155,12 +155,14 @@ def text_domain_prototype_classifier(
 
     proto = memo_persist(
         "domain_prototypes",
-        (spark.sparkContext.applicationId, sf_dir, _PROTO_K),
+        spark,
+        sf_dir,
         lambda: (
             sdf.withColumn("rn", F.row_number().over(w_proto))
             .filter(F.col("rn") <= _PROTO_K)
             .select("source", "term")
         ),
+        params=(_PROTO_K,),
     )
     psize = proto.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("k_s")
@@ -1118,8 +1120,10 @@ def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     kept = memo_persist(
         "sparse_cosine_kept_terms",
-        (spark.sparkContext.applicationId, sf_dir, _SPARSE_DF_FLOOR),
+        spark,
+        sf_dir,
         _kept,
+        params=(_SPARSE_DF_FLOOR,),
     )
     v = tf.join(kept, "term")
     norms = v.groupBy("doc_id").agg(
@@ -1491,9 +1495,7 @@ def events_path_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # type-tuple grain (tiny) persisted so the three marginals and the
     # final join read ONE trigram-window pass instead of four corpus
     # scans (review finding, r12i)
-    n3 = memo_persist(
-        "markov_tri", (spark.sparkContext.applicationId, sf_dir), build_n3
-    )
+    n3 = memo_persist("markov_tri", spark, sf_dir, build_n3)
     nab = n3.groupBy("a", "b").agg(F.sum("n_abc").cast("bigint").alias("n_ab"))
     nbc = n3.groupBy("b", "c").agg(F.sum("n_abc").cast("bigint").alias("n_bc"))
     nb = n3.groupBy("b").agg(F.sum("n_abc").cast("bigint").alias("n_b"))

@@ -159,17 +159,9 @@ def events_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the query entirely (shredding). Absent keys / invalid JSON
     degrade to NULL through the try_* forms — the same coercion contract
     as the engine's P7 lossy casts.
-
-    On Spark 3.5 (no VARIANT) the same stats run through the
-    get_json_object path — identical results, linear-per-extraction
-    cost; the version branch is the loader-style degrade-don't-break
-    posture (REQUIREMENTS.md).
     """
     events = load_table(spark, sf_dir, "events")
-    if int(spark.version.split(".")[0]) >= 4:
-        k = F.try_variant_get(F.try_parse_json("props"), "$.k", "bigint")
-    else:  # pragma: no cover — Spark 3.x fallback
-        k = F.get_json_object("props", "$.k").try_cast("bigint")
+    k = F.try_variant_get(F.try_parse_json("props"), "$.k", "bigint")
     return (
         events.select("event_type", k.alias("k"))
         .groupBy("event_type")

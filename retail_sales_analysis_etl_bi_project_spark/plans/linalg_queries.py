@@ -145,7 +145,7 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Execution shape (r15 optimization): the moment fit — d² + d exact
     partial sums, KBs at ANY corpus size — is collected once per
-    (app, sf) as the family's FITTED ARTIFACT (the codebook
+    (app, sf, input files) as the family's FITTED ARTIFACT (the codebook
     discipline; memo_artifact, released by bench hygiene like every
     managed cache). The power-iteration rounds, Rayleigh quotient,
     trace, and explained-variance share are exact unbounded-int Python
@@ -164,9 +164,7 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         return fit_moments(quantized_elements(emb))
 
-    ment, sums, counts = memo_artifact(
-        "cov_moments_fit", (spark.sparkContext.applicationId, sf_dir), fit
-    )
+    ment, sums, counts = memo_artifact("cov_moments_fit", spark, sf_dir, fit)
     schema = (
         "dim_idx bigint, eigvec_q bigint, var_ii_scaled double, "
         "lambda_scaled double, explained_share double, n_vectors bigint"

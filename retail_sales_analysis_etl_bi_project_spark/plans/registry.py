@@ -10,22 +10,21 @@ driver's weaker rows-only check.
 
 A registered plan is a function of the files under ``sf_dir`` and of
 the session's SQL confs, so ``QUERIES`` serves each builder through a
-plan memo (``shared_cache.memo_plan``, one family per query). Its key
-is (applicationId, sf_dir, ``sources.tables._path_sig(sf_dir)``, the
-session's SQL confs as one string). The signature lists the relative
-path, mtime and size of every entry under ``sf_dir``, so rewriting,
-adding or removing a file there makes the next call build afresh. A
-plan is kept only when every leaf of its analyzed plan, subqueries
-included, is a file scan under ``sf_dir`` or literal rows
+plan memo (``shared_cache.memo_plan``, one family per query), keyed
+by the memo's one rule (shared_cache) with the session's SQL confs as
+one string for params. The key's signature lists the relative path,
+mtime and size of every entry under ``sf_dir``, so rewriting, adding
+or removing a file there makes the next call build afresh. A plan is
+kept only when every leaf of its analyzed plan, subqueries included,
+is a file scan under ``sf_dir`` or literal rows
 (``_DATA_FREE_LEAVES``). A plan that reads elsewhere (a roundtrip's
-staging dir) or holds an RDD (a localCheckpoint, ``createDataFrame``
-over a list) is rebuilt on every call, as is every call over an
-``sf_dir`` that ``os`` cannot list. A plan built over a managed
-persist is kept with it, and misses once that persist is evicted or
-released. A hit skips only the builder: the returned Dataset is
-optimized, physically planned and executed anew, with the same jobs,
-stages and tasks as a fresh build. The decorated function itself stays
-unmemoized for direct callers.
+staging dir, a remote ``sf_dir``) or holds an RDD (a localCheckpoint,
+``createDataFrame`` over a list) is rebuilt on every call. A plan
+built over a managed persist or fitted artifact is kept with it, and
+misses once that entry is evicted or released. A hit skips only the
+builder: the returned Dataset is optimized, physically planned and
+executed anew, with the same jobs, stages and tasks as a fresh build.
+The decorated function itself stays unmemoized for direct callers.
 """
 
 from __future__ import annotations
@@ -38,7 +37,6 @@ from urllib.parse import urlparse
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.tables import _path_sig
 from . import shared_cache
 
 Builder = Callable[[SparkSession, str], DataFrame]
@@ -84,14 +82,14 @@ def _memoized(name: str, fn: Builder) -> Builder:
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            sig = _path_sig(sf_dir)
-        except OSError:  # a remote or unlistable sf_dir: no key
-            return fn(spark, sf_dir)
         confs = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
-        key = (spark.sparkContext.applicationId, sf_dir, sig, confs)
         return shared_cache.memo_plan(
-            family, key, lambda: fn(spark, sf_dir), lambda df: _reads_only_under(df, sf_dir)
+            family,
+            spark,
+            sf_dir,
+            lambda: fn(spark, sf_dir),
+            lambda df: _reads_only_under(df, sf_dir),
+            params=(confs,),
         )
 
     return run

@@ -143,11 +143,11 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cbg_all = memo_persist("bigram_counts", key, build_cbg_all)
+    cbg_all = memo_persist("bigram_counts", spark, sf_dir, build_cbg_all)
     uni = memo_persist(
         "bigram_uni",
-        key,
+        spark,
+        sf_dir,
         lambda: lower_terms(docs)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n_term")),
@@ -266,7 +266,8 @@ def _mix_inputs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     d = memo_persist(
         "budget_docs",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: docs.select(
             "doc_id",
             "source",

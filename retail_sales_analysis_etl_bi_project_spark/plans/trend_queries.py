@@ -72,7 +72,8 @@ def shared_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σ(a·10⁴) = (Σa)·10⁴), so consumers' values are unchanged."""
     return memo_persist(
         "daily_rev",
-        (spark.sparkContext.applicationId, sf_dir),
+        spark,
+        sf_dir,
         lambda: load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(

@@ -117,7 +117,7 @@ def get_spark(
         # Python DataSource filter pushdown (sources/pyds.py): a reader
         # that implements pushFilters() ERRORS when this is off (4.1's
         # fail-loud contract), and the conf is read at plan time, so the
-        # engine session enables it up front. Ignored by Spark 3.x.
+        # engine session enables it up front.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
@@ -131,7 +131,6 @@ def get_spark(
         spark = running
     else:
         spark = builder.getOrCreate()
-    ensure_nanos_as_long(spark)
     manager = _checkpoint_file_manager(spark)
     if manager is not None and CHECKPOINT_FILE_MANAGER_CONF not in (extra_conf or {}):
         spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, manager)
@@ -145,24 +144,3 @@ def _checkpoint_file_manager(spark: SparkSession) -> str | None:
         if isinstance(reduce(getattr, name.split("."), spark._jvm), JavaClass):
             return name
     return None
-
-
-def ensure_nanos_as_long(spark: SparkSession) -> None:
-    """Spark 3.x-only shim: parquet TIMESTAMP(NANOS) columns (events.ts
-    in the driver testdata) can only be read on 3.x via the
-    ``nanosAsLong`` legacy conf, which surfaces them as raw nanos longs;
-    the loader (sources/tables.py) then truncates to microsecond
-    timestamps — the value DuckDB produces for the same file.
-
-    Spark 4.x REMOVED this conf (setting it is a silent no-op) and reads
-    TIMESTAMP(NANOS) natively, truncated to identical microsecond
-    values, so this helper is skipped there entirely. The loader does
-    NOT assume this conf worked: it branches on the scanned dtype.
-
-    This is the ONLY place the conf is mutated, so the policy stays
-    greppable in one location."""
-    if int(spark.version.split(".")[0]) >= 4:
-        return
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    if spark.conf.get(key, "false") != "true":
-        spark.conf.set(key, "true")

@@ -39,18 +39,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one parquet table. Explicit per-table path (no glob)
     so partition discovery cost is zero and pruning is trivial.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS). How Spark
-    surfaces that differs by major version, so we normalise it to a
-    microsecond ``TimestampType`` by branching on the *actual* scanned
-    dtype rather than assuming a conf took effect:
+    ``events.ts`` is written as parquet TIMESTAMP(NANOS); we normalise
+    it to a microsecond ``TimestampType`` by branching on the *actual*
+    scanned dtype rather than assuming a conf took effect:
 
-    - Spark 3.x + ``spark.sql.legacy.parquet.nanosAsLong=true``: the
-      column arrives as a raw nanos ``LongType`` → truncate to micros
-      and re-type (``timestamp_micros``).
-    - Spark 4.x (conf removed, silently ignored): the column arrives
-      natively as ``TimestampNTZType`` (or ``TimestampType`` when
-      ``spark.sql.parquet.inferTimestampNTZ.enabled=false``), already
-      truncated to identical microsecond values. NTZ wall-clocks are
+    - ``TimestampType`` when
+      ``spark.sql.parquet.inferTimestampNTZ.enabled=false``: already
+      truncated to microseconds, returned as scanned.
+    - ``TimestampNTZType`` otherwise, truncated to identical
+      microsecond values. NTZ wall-clocks are
       anchored as UTC instants via pure CALENDAR-FIELD arithmetic
       (epoch days * 86400e6 + time-of-day micros -> timestamp_micros):
       no timezone enters the computation at all, so the instant equals
@@ -60,12 +57,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       by the DST delta (probe-verified: UTC/NY/Tokyo x {DST-gap,
       DST-overlap, plain} wall clocks).
 
-    All three arms yield the same instants DuckDB produces for the
-    same file (verified in tests/test_sources.py)."""
+    Both arms yield the same instants DuckDB produces for the same
+    file (verified in tests/test_sources.py)."""
     if name == "events":
-        from ..session import ensure_nanos_as_long
-
-        ensure_nanos_as_long(spark)  # no-op on Spark 4.x
         return normalize_events_ts(_scan(spark, f"{sf_dir}/{name}.parquet"))
     return _scan(spark, f"{sf_dir}/{name}.parquet")
 
@@ -117,7 +111,6 @@ def _scan(spark: SparkSession, path: str) -> DataFrame:
             spark.conf.get(c, None)
             for c in (
                 "spark.sql.parquet.inferTimestampNTZ.enabled",
-                "spark.sql.legacy.parquet.nanosAsLong",
                 "spark.sql.caseSensitive",
             )
         )
@@ -131,12 +124,6 @@ def _scan(spark: SparkSession, path: str) -> DataFrame:
         _SCHEMA_CACHE[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
-
-
-def clear_schema_cache() -> None:
-    """Test hook: drop every memoized schema (fixtures that rewrite
-    parquet in place can force re-inference explicitly)."""
-    _SCHEMA_CACHE.clear()
 
 
 def _leaf_file_count(path: str) -> int | None:
@@ -209,15 +196,15 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     Branches on the actual dtype so a Spark upgrade that changes scan
     behavior degrades to a visible test failure, not a broken plan."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from pyspark.sql.types import TimestampNTZType
 
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        ts_col = F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))")
-    elif isinstance(ts_type, TimestampNTZType):
-        # instant := wall-clock-as-UTC via calendar fields only — no
-        # session-timezone dependence, no DST edge cases (see docstring)
-        ts_col = F.expr(
+    if not isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        return df  # already TimestampType — parquet micros read natively
+    # instant := wall-clock-as-UTC via calendar fields only — no
+    # session-timezone dependence, no DST edge cases (see docstring)
+    return df.withColumn(
+        "ts",
+        F.expr(
             "timestamp_micros("
             "CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)"
             " * 86400000000"
@@ -225,10 +212,8 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
             "    + CAST(minute(ts) AS BIGINT) * 60"
             "    + CAST(second(ts) AS BIGINT)) * 1000000"
             " + CAST(date_format(ts, 'SSSSSS') AS BIGINT))"
-        )
-    else:  # already TimestampType — parquet micros read natively
-        return df
-    return df.withColumn("ts", ts_col)
+        ),
+    )
 
 
 def load_tables(

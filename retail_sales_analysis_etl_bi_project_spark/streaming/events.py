@@ -41,13 +41,12 @@ def read_events_stream(
     """File-source stream over the events parquet (tests / local dev).
 
     ``events.ts`` is parquet TIMESTAMP(NANOS); what a user-supplied
-    schema yields differs by Spark major version (same boundary as the
-    batch loader, sources/tables.py). We probe the BATCH scan dtype once
-    (footer-only, no data read) and pick the matching streaming schema:
+    schema yields depends on the session's NTZ inference (same
+    boundary as the batch loader, sources/tables.py). We probe the
+    BATCH scan dtype once (footer-only, no data read) and pick the
+    matching streaming schema:
 
-    - batch scan says LongType (Spark 3.x + nanosAsLong conf): read
-      ``ts bigint`` = raw nanos.
-    - batch scan says TimestampNTZType (Spark 4.x default, NTZ
+    - batch scan says TimestampNTZType (Spark 4 default, NTZ
       inference on): read ``ts timestamp_ntz`` — matching the batch
       scan's dtype keeps the streamed wall clocks timezone-independent
       (an LTZ ``ts timestamp`` schema here would shift the instants by
@@ -55,23 +54,16 @@ def read_events_stream(
     - batch scan says TimestampType (NTZ inference off): read ``ts
       timestamp`` directly.
 
-    All arms then normalise through the SAME ``normalize_events_ts``
+    Both arms then normalise through the SAME ``normalize_events_ts``
     the batch loader uses (dtype-branching, DST-proof calendar-field
     NTZ anchoring), so stream and batch agree under any session
     timezone."""
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from pyspark.sql.types import TimestampNTZType
 
-    from ..session import ensure_nanos_as_long
     from ..sources.tables import normalize_events_ts
 
-    ensure_nanos_as_long(spark)  # no-op on Spark 4.x
     batch_ts = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-    if isinstance(batch_ts, LongType):
-        ts_field = "ts bigint"
-    elif isinstance(batch_ts, TimestampNTZType):
-        ts_field = "ts timestamp_ntz"
-    else:
-        ts_field = "ts timestamp"
+    ts_field = "ts timestamp_ntz" if isinstance(batch_ts, TimestampNTZType) else "ts timestamp"
     raw = (
         spark.readStream.schema(
             f"event_id bigint, {ts_field}, user_id bigint, event_type string, "

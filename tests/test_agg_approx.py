@@ -56,13 +56,8 @@ def test_approx_top_k_agrees_with_exact_heavy_hitters(spark, sf_dir):
     so the top-10 items AND counts must match the exact groupBy — the
     documented 100 TB form when the token vocabulary outgrows a
     groupBy's shuffle (sketches merge map-side, fixed size)."""
-    import pytest
-
     from retail_sales_analysis_etl_bi_project_spark.operators.text import tokens_expr
     from retail_sales_analysis_etl_bi_project_spark.sources.tables import load_table
-
-    if int(spark.version.split(".")[0]) < 4:
-        pytest.skip("approx_top_k is Spark 4+")
 
     docs = load_table(spark, sf_dir, "documents")
     tall = docs.select(F.explode(tokens_expr("text")).alias("tok")).select(

@@ -179,11 +179,11 @@ def test_families_coexist_no_cross_family_eviction(spark):
     assert sh.storageLevel.useMemory
     assert sig.storageLevel.useMemory
     assert {"term_tf", "shingles", "minhash_sigs"} <= set(
-        shared_cache._CACHES
+        shared_cache._SLOTS
     )
     assert all(
-        len(shared_cache._CACHES[f]) == 1
-        for f in ("term_tf", "shingles", "minhash_sigs")
+        shared_cache._SLOTS[f][1] is h
+        for f, h in (("term_tf", tf), ("shingles", sh), ("minhash_sigs", sig))
     )
     # serving again is a key hit on every family (no rebuild)
     assert _shared_tf(spark, SF_DIR) is tf

@@ -224,15 +224,15 @@ def test_concurrent_hits_match_the_oracle(spark, sf_dir, qs):
     assert _counts(Q)[0] - hits == 40
 
 
-def test_counts_lose_no_update():
+def test_counts_lose_no_update(spark, tmp_path):
     """Hits counted from more threads than cores, switching often, sum
     exactly."""
     family = f"test-counts-{uuid.uuid4().hex}"
-    shared_cache.memo_artifact(family, (1,), lambda: 1)
+    shared_cache.memo_artifact(family, spark, str(tmp_path), lambda: 1)
 
     def client():
         for _ in range(2000):
-            shared_cache.memo_artifact(family, (1,), lambda: 1)
+            shared_cache.memo_artifact(family, spark, str(tmp_path), lambda: 1)
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -251,9 +251,9 @@ def test_counts_lose_no_update():
 
 def test_release_drops_plan_entries(spark, sf_dir, qs):
     qs[Q](spark, sf_dir)
-    assert f"plan:{Q}" in shared_cache._ARTIFACTS
+    assert f"plan:{Q}" in shared_cache._SLOTS
     shared_cache.release()
-    assert f"plan:{Q}" not in shared_cache._ARTIFACTS
+    assert f"plan:{Q}" not in shared_cache._SLOTS
     hits, misses = _counts(Q)
     qs[Q](spark, sf_dir)
     assert _counts(Q) == (hits, misses + 1)
@@ -301,20 +301,53 @@ def test_plan_over_a_persist_misses_once_the_persist_is_gone(spark, sf_dir, qs):
     shared_cache.release()
 
 
-def test_a_persist_over_rewritten_inputs_is_rebuilt(spark, sf_dir, qs, tmp_path):
-    """A managed persist is keyed by the files under ``sf_dir`` too, so
-    the build that follows an in-place rewrite persists the new files'
-    intermediate instead of reusing the one over the old files."""
-    name = "text_tfidf_topterms"  # builds over the term_tf persist
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_tfidf_topterms",  # builds over the term_tf persist
+        "text_bpe_encode_counts",  # encodes with the fitted bpe_merges
+    ],
+)
+def test_a_persist_over_rewritten_inputs_is_rebuilt(spark, sf_dir, qs, tmp_path, name):
+    """Managed persists and fitted artifacts are keyed by the files
+    under ``sf_dir`` too, so the build that follows an in-place rewrite
+    builds over the new files instead of reusing what was built over
+    the old ones."""
     docs = pq.read_table(f"{sf_dir}/documents.parquet")
     root = str(tmp_path / "sf")
     _write(docs, f"{root}/documents.parquet", slice(0, docs.num_rows))
     shared_cache.release()
     before = _rows(qs[name](spark, root))
-    # rewritten in place with half its rows
-    _write(docs, f"{root}/documents.parquet", slice(0, docs.num_rows // 2))
+    # rewritten in place with its second half of rows
+    _write(docs, f"{root}/documents.parquet", slice(docs.num_rows // 2, docs.num_rows))
     after = _rows(qs[name](spark, root))
     shared_cache.release()
     assert after == _rows(qs[name].__wrapped__(spark, root))
     assert after != before
     shared_cache.release()
+
+
+def test_a_codebook_over_rewritten_inputs_is_refit(spark, sf_dir, tmp_path):
+    """The IVF codebook is a fitted artifact like any other: an in-place
+    rewrite of the embeddings refits it, a repeat call is a hit, and
+    ``release()`` drops it. The refinement-0 codebook is built from the
+    leading vectors, so the rewrite keeps the second half."""
+    from retail_sales_analysis_etl_bi_project_spark.operators.similarity import ivf_assignments
+    from retail_sales_analysis_etl_bi_project_spark.plans.similarity_queries import (
+        _corpus_codebook,
+    )
+
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    root = str(tmp_path / "sf")
+    _write(emb, f"{root}/embeddings.parquet", slice(0, emb.num_rows))
+    shared_cache.release()
+    before = _corpus_codebook(spark, root)
+    _write(emb, f"{root}/embeddings.parquet", slice(emb.num_rows // 2, emb.num_rows))
+    after = _corpus_codebook(spark, root)
+    fresh = ivf_assignments(tables.load_table(spark, root, "embeddings"), 16)[1]
+    assert after == fresh and fresh != before
+    hits, misses = shared_cache.counts()["codebook_i0"]
+    assert _corpus_codebook(spark, root) is after
+    assert shared_cache.counts()["codebook_i0"] == (hits + 1, misses)
+    shared_cache.release()
+    assert "codebook_i0" not in shared_cache._SLOTS

@@ -1,11 +1,11 @@
 """Loader regression tests — the events.ts dtype matrix.
 
 The driver testdata writes ``events.ts`` as parquet TIMESTAMP(NANOS),
-whose scanned dtype changed across the Spark 3.x -> 4.x boundary (the
-``nanosAsLong`` legacy conf was removed in 4.x). These tests are the
-canary: if a future environment bump changes the scan shape again, this
-file fails in seconds instead of the driver's full correctness suite
-erroring wholesale (which is exactly what happened in round 4).
+whose scanned dtype depends on the Spark version and on its NTZ
+inference conf. These tests are the canary: if a future environment
+bump changes the scan shape again, this file fails in seconds instead
+of the full correctness suite erroring wholesale (which is exactly what
+happened in round 4).
 """
 
 import datetime
@@ -14,7 +14,6 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    LongType,
     StructField,
     StructType,
     TimestampNTZType,
@@ -45,17 +44,6 @@ def test_events_loads_as_timestamp_with_known_range(spark, sf_dir):
         f"SELECT min(ts), max(ts) FROM read_parquet('{sf_dir}/events.parquet')"
     ).fetchone()
     assert row["lo"] == lo and row["hi"] == hi
-
-
-def test_normalize_long_arm_truncates_nanos_to_micros(spark):
-    """Spark 3.x shape: raw nanos long -> micros timestamp."""
-    nanos = 1_704_067_200_123_456_789  # 2024-01-01T00:00:00.123456789Z
-    df = spark.createDataFrame(
-        [(nanos,)], StructType([StructField("ts", LongType())])
-    )
-    out = normalize_events_ts(df)
-    assert isinstance(out.schema["ts"].dataType, TimestampType)
-    assert out.collect()[0]["ts"] == datetime.datetime(2024, 1, 1, 0, 0, 0, 123456)
 
 
 def test_normalize_ntz_arm_anchors_wall_clock_as_utc(spark):
@@ -102,21 +90,6 @@ def test_normalize_timestamp_arm_is_identity(spark, sf_dir):
     if not isinstance(df.schema["ts"].dataType, TimestampType):
         pytest.skip("scan shape is not the TimestampType arm in this env")
     assert normalize_events_ts(df) is df
-
-
-def test_long_arm_via_parquet_fixture(spark, tmp_path):
-    """End-to-end 3.x simulation: an events.parquet whose ts column IS a
-    long (as the nanosAsLong conf produced) loads through load_table and
-    comes out as the equivalent micros timestamp."""
-    nanos = 1_704_067_200_123_456_789
-    df = spark.createDataFrame(
-        [(1, nanos, 7, "click", 1.5, "{}")],
-        "event_id long, ts long, user_id long, event_type string, value double, props string",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = load_table(spark, str(tmp_path), "events")
-    assert isinstance(out.schema["ts"].dataType, TimestampType)
-    assert out.collect()[0]["ts"] == datetime.datetime(2024, 1, 1, 0, 0, 0, 123456)
 
 
 def test_load_fact_wide_repartitions_narrow_layouts_only(

@@ -26,10 +26,10 @@ registered query, record
                 queries is printed last.
 
 One pass per query (cold within the session, after a few warm-ups),
-with between-queries hygiene so one query's persists don't subsidize
-the next. Output: JSON table to stdout + SWEEP.json. ``only_csv``
-restricts the sweep to the named queries, e.g. one cold pass of a
-single query. Warm repeats and run-to-run spread are perfbench's job.
+with between-queries hygiene so one query's persists and fitted
+artifacts don't subsidize the next. Output: JSON table to stdout +
+SWEEP.json. ``only_csv`` restricts the sweep to the named queries,
+e.g. one cold pass of a single query. Warm repeats and run-to-run spread are perfbench's job.
 
 Usage: python tools/sweep_registry.py [sf_dir] [out_path] [only_csv]
 """
@@ -65,9 +65,12 @@ COUNT_ONLY_PREFIXES = (
 def _post_query_hygiene(spark) -> None:
     """Between-queries measurement hygiene, on success AND failure:
 
-    - release every memo_persist'd table — it would otherwise stay
-      pinned in executor storage for every SUBSEQUENT query, and
-      System.gc() can't reclaim a live shared_cache reference.
+    - release every shared_cache entry. A persisted table would
+      otherwise stay pinned in executor storage for every SUBSEQUENT
+      query, and System.gc() can't reclaim a live shared_cache
+      reference. Fitted artifacts go too (Bloom bitmaps, BPE merges,
+      covariance moments, IVF codebooks), so each query's row includes
+      its own fits.
     - nudge the JVM to free the previous query's dead weight
       (localCheckpoint blocks, broadcast vars — ContextCleaner only
       reclaims them after a GC notices the dead references) OUTSIDE any
